@@ -32,7 +32,7 @@ Scale: both operators are one keyed window over user_id — a single
 shuffle on the key, no self-join, no collect. At 100 TB the changelog
 would already be bucketed by key (the warehouse's bucketed layout),
 making the window shuffle-free; the current-state view is exactly the
-compaction `streaming/upsert.compact_latest` amortizes for readers.
+state `sources/merge.merge_upsert` keeps materialized for readers.
 """
 
 from __future__ import annotations

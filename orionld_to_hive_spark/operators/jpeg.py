@@ -1683,14 +1683,6 @@ def multimodal_jpeg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _fused_pixel_stats(spark, sf_dir, encode_jpeg_gray_flat)
 
 
-def jpeg_progressive_assets_from_documents(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    return _assets_from_documents(
-        spark, sf_dir, encode_jpeg_gray_flat_progressive
-    )
-
-
 def multimodal_jpeg_progressive_stats(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1715,12 +1707,6 @@ def multimodal_jpeg_progressive_color_stats(
     return _fused_pixel_stats(
         spark, sf_dir, encode_jpeg_color_flat_progressive
     )
-
-
-def jpeg_color_assets_from_documents(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    return _assets_from_documents(spark, sf_dir, encode_jpeg_color_flat)
 
 
 def multimodal_jpeg_color_stats(
@@ -1775,12 +1761,6 @@ SELECT d.doc_id AS asset_id,
 FROM dims d LEFT JOIN agg a ON d.doc_id = a.doc_id
 ORDER BY asset_id
 """
-
-
-def jpeg_cmyk_assets_from_documents(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    return _assets_from_documents(spark, sf_dir, encode_jpeg_cmyk_flat)
 
 
 def multimodal_jpeg_cmyk_stats(

@@ -495,15 +495,29 @@ class _Doc:
         if self.entries and max(self.entries) >= self.trailer["Size"]:
             raise ValueError("pdf: /Size does not bound the object numbers")
         self._cache: dict[int, tuple[object, int]] = {}
+        self._resolving: set[int] = set()
 
     def object(self, ref: _Ref) -> tuple[object, int]:
         """→ (value, stream_length) — stream_length −1 when the object
         has no stream. Verifies the xref offset points at `num gen obj`
-        and that /Length frames `endstream` exactly."""
+        and that /Length frames `endstream` exactly. An indirect /Length
+        that leads back to an object still being resolved (its own
+        stream, or a cycle through others) is a ValueError."""
         if ref.num in self._cache:
             return self._cache[ref.num]
         if ref.num not in self.entries:
             raise ValueError(f"pdf: reference to absent object {ref.num}")
+        if ref.num in self._resolving:
+            raise ValueError(f"pdf: reference cycle through object {ref.num}")
+        self._resolving.add(ref.num)
+        try:
+            resolved = self._resolve(ref)
+        finally:
+            self._resolving.discard(ref.num)
+        self._cache[ref.num] = resolved
+        return resolved
+
+    def _resolve(self, ref: _Ref) -> tuple[object, int]:
         off, gen = self.entries[ref.num]
         if gen != ref.gen:
             raise ValueError(f"pdf: generation mismatch on object {ref.num}")
@@ -541,7 +555,6 @@ class _Doc:
                     or tail.lstrip(b"\r\n").startswith(b"endstream")):
                 raise ValueError("pdf: /Length does not frame endstream")
             slen = length
-        self._cache[ref.num] = (val, slen)
         return val, slen
 
     def _count_pages(self, ref: _Ref, depth: int = 0) -> int:

@@ -574,8 +574,8 @@ ORDER BY bar_ts, event_type
 # SCD2-style validity intervals: each per-user event opens a
 # [valid_from, valid_to) state interval closed by the next event; the
 # newest row stays open (valid_to NULL, is_current). This is the
-# type-2 slowly-changing-dimension view of an event log — the batch
-# twin of `streaming/upsert.py`'s type-1 latest-wins compaction. One
+# type-2 slowly-changing-dimension view of an event log — the history
+# counterpart of `sources/merge.latest_wins`'s type-1 latest state. One
 # (user_id) window shuffle; (ts, event_id) ordering makes interval
 # boundaries deterministic under timestamp ties.
 def scd2_user_history(spark: SparkSession, sf_dir: str) -> DataFrame:

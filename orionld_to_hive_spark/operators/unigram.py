@@ -57,10 +57,6 @@ UNK_LP = -20 * LP_SCALE  # single-char fallback for unseen characters
 _E_SCALE = 1_000_000_000  # E-step expected counts rounded to 1e-9
 
 
-def _truncate(word: str) -> str:
-    return word[:WORD_CAP]
-
-
 # --------------------------------------------------------------------------
 # trainer
 

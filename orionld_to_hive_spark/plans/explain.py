@@ -18,10 +18,6 @@ def executed_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def optimized_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()
-
-
 def formatted(df: DataFrame) -> str:
     sc = df.sparkSession.sparkContext
     return sc._jvm.PythonSQLUtils.explainString(

@@ -53,25 +53,3 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str):
-    """Read driver-generated parquet tables; returns dict name -> DataFrame.
-
-    Parquet scans get Catalyst predicate pushdown + column pruning for
-    free; callers filter/select on the returned frames and the scan
-    narrows accordingly.
-    """
-    names = names or (
-        "region",
-        "nation",
-        "customer",
-        "supplier",
-        "part",
-        "orders",
-        "lineitem",
-        "events",
-        "documents",
-        "embeddings",
-    )
-    return {n: spark.read.parquet(os.path.join(sf_dir, f"{n}.parquet")) for n in names}

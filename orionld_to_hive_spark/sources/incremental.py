@@ -12,7 +12,7 @@ incremental pattern replaces that: persist the max ingested event time
 
 Crash between the data commit and the watermark write re-ingests the
 same slice on retry → at-least-once. That is deliberate: pair with the
-latest-wins upsert view (streaming/upsert.py) or exact dedup for
+latest-wins merge (sources/merge.py) or exact dedup for
 effectively-once, the same contract Structured Streaming's
 foreachBatch gives. Advancing the watermark first would silently DROP
 data on crash — never that order.

@@ -1,21 +1,37 @@
-"""Batch MERGE (upsert) into the partitioned-parquet warehouse —
-copy-on-write, touching ONLY the partitions the updates land in.
+"""Batch MERGE (upsert), DELETE and UPDATE on the partitioned-parquet
+warehouse — copy-on-write, touching ONLY the partitions the change
+lands in.
 
-The batch twin of `streaming/upsert.py`'s latest-wins entity upsert
-(reference `subscriber.py:97-123` holds the per-entity latest-state
-precedent), and the plain-parquet expression of what Delta/Hudi/Iceberg
-call MERGE INTO with copy-on-write:
+The reference keeps the latest state per entity (`subscriber.py:97-123`
+holds the per-entity latest-state precedent); this is the plain-parquet
+expression of what Delta/Hudi/Iceberg call MERGE INTO with
+copy-on-write. `merge_upsert`, `delete_where` and `update_where` share
+one core, run under the table's single-writer lock:
 
-  1. prune: collect the DISTINCT partition values present in the
-     updates (an aggregate over the small update batch, not the table);
+  1. prune: collect the DISTINCT partition values the change touches
+     (for MERGE an aggregate over the small update batch, not the
+     table; for DELETE/UPDATE a partition-pruned scan under the
+     condition);
   2. read back ONLY those partitions of the target (partition-pruned
-     scan — the 100 TB table contributes just the touched slice);
-  3. latest-wins dedup of (existing ∪ updates) per key by a version
-     column, deterministic tiebreak on provenance (update beats
-     existing at equal version);
-  4. dynamic partition-overwrite of exactly those partitions
-     (`overwrite_partitions`) — untouched partitions keep their files
-     byte-for-byte (asserted by mtime in tests).
+     scan — the 100 TB table contributes just the touched slice) and
+     derive the new slice from them: for MERGE a latest-wins dedup
+     (`latest_wins`) of (existing ∪ updates) per key by a version
+     column, update beating existing at equal version;
+  3. list each touched partition directory, then dynamic
+     partition-overwrite the slice (`overwrite_partitions`) — untouched
+     partitions keep their files byte-for-byte (asserted by mtime in
+     tests);
+  4. dynamic overwrite replaces every partition it writes as a whole
+     directory, so a touched partition that still holds a file listed
+     in step 3 got no rows from the slice: it was emptied (every row
+     deleted, or lost latest-wins to a row in another touched
+     partition), and its directory is deleted. The write is the only
+     evaluation of the slice.
+
+The latest-wins tiebreak ends in a hash of the row's values, so the
+winner is a pure function of the rows: a replayed batch that carries
+the same key twice at the same version picks the same winner every
+time, and the table converges to one state.
 
 Scale: cost is O(touched partitions + update batch), independent of
 table size. The latest-wins dedup is one window over (key) within the
@@ -25,6 +41,10 @@ key to make this shuffle-free; the warehouse's bucketed path
 """
 
 from __future__ import annotations
+
+import functools
+import operator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -171,6 +191,157 @@ def _release_lock(lock_fs, lock, owned_mtime) -> None:
         pass  # release is best-effort; a leftover lock is reclaimable
 
 
+@contextmanager
+def _locked(spark, target_path: str, break_stale_lock_s: float | None):
+    """The single-writer critical section: everything from the target
+    read to the emptied-partition delete is read-modify-write and must
+    not interleave with another writer. Shared by all three DML entry
+    points — they mutate the same partitions, so they exclude each
+    other too. The lock is released on success AND on failure."""
+    lock_fs, lock, owned_mtime = _acquire_lock(
+        spark, target_path, break_stale_lock_s
+    )
+    try:
+        yield
+    finally:
+        _release_lock(lock_fs, lock, owned_mtime)
+
+
+def _read_target(spark, target_path: str, merge_schema: bool):
+    # mergeSchema only when evolving: it reads every file footer,
+    # which a 100 TB table should not pay on the default path
+    reader = spark.read.option("mergeSchema", "true") if merge_schema else spark.read
+    return reader.parquet(target_path)
+
+
+def _touched_rows(df: DataFrame, partition_cols: tuple[str, ...]) -> list:
+    """The distinct partition values of `df` — small: one row per
+    touched partition. Alongside each raw value, Spark's OWN string
+    rendering of it (cast-to-string, as `__str_<col>`): the
+    partition-directory paths `_rewrite` builds must reproduce the
+    writer's directory naming exactly, and Python str() diverges from
+    it for non-string types (True vs 'true' for booleans, microsecond
+    formatting for timestamps)."""
+    strs = [F.col(c).cast("string").alias(f"__str_{c}") for c in partition_cols]
+    return df.select(*partition_cols, *strs).distinct().collect()
+
+
+def _partition_pred(rows, partition_cols: tuple[str, ...]):
+    """Touched-partition predicate: a disjunction of partition-value
+    conjunctions, which Catalyst folds into partition pruning
+    (PartitionFilters in the scan). eqNullSafe so that target rows
+    sitting in a NULL partition (written before merge's non-NULL guard,
+    or by another writer) evaluate to a definite false, not NULL —
+    merge's stability check negates this predicate, and ~NULL would
+    silently drop those rows from the foreign set (an `isin`
+    formulation has exactly that blind spot)."""
+    conjs = []
+    for r in rows:
+        terms = [F.col(c).eqNullSafe(F.lit(r[c])) for c in partition_cols]
+        conjs.append(functools.reduce(operator.and_, terms))
+    return functools.reduce(operator.or_, conjs)
+
+
+def _rewrite(
+    spark,
+    target_path: str,
+    partition_cols: tuple[str, ...],
+    touched_rows,
+    slice_df: DataFrame,
+) -> int:
+    """Replace the touched partitions with `slice_df`; returns how many
+    partitions were touched.
+
+    Each touched partition directory is listed before the write. Dynamic
+    partition-overwrite replaces every partition it writes as a whole
+    directory, so a touched partition that still holds a pre-write file
+    afterwards got no rows from the slice — it was emptied — and its
+    directory is deleted here. Write-then-delete order keeps the table
+    recoverable if the write fails mid-rewrite. Hadoop FS API, so the
+    same code path works on HDFS/S3A, not just local disk.
+
+    Spark escapes partition values in directory names (Hive path
+    escaping: '=', ':', '%', '#', '/', control chars → %XX), so the
+    paths must be built with the SAME escaping or the listing silently
+    misses the directory and the stale copy the delete exists to clear
+    survives. Use Spark's own escapePathName so the two can never
+    drift."""
+    jvm = spark._jvm
+    Path = jvm.org.apache.hadoop.fs.Path
+    fs = Path(target_path).getFileSystem(spark._jsc.hadoopConfiguration())
+    esc = jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    listed = []
+    for r in touched_rows:
+        # a NULL partition value (possible via delete_where on tables
+        # other writers produced; merge rejects them on ingest) lands in
+        # Spark's default-partition directory
+        segs = [
+            (
+                f"{c}={esc.escapePathName(r[f'__str_{c}'])}"
+                if r[f"__str_{c}"] is not None
+                else f"{c}=__HIVE_DEFAULT_PARTITION__"
+            )
+            for c in partition_cols
+        ]
+        d = Path(target_path, "/".join(segs))
+        # one pre-write file witnesses the whole directory: the
+        # overwrite replaces all of a partition's files or none. A
+        # partition that does not exist yet has no witness — if all of
+        # its rows lost latest-wins, there is nothing to clear.
+        if fs.exists(d):
+            files = [st.getPath() for st in fs.listStatus(d) if st.isFile()]
+            if files:
+                listed.append((segs, d, files[0]))
+
+    overwrite_partitions(slice_df, target_path, partition_cols)
+
+    for segs, d, witness in listed:
+        if not fs.exists(witness):
+            continue  # rewritten by the overwrite
+        # an EXISTING directory that fails to delete must not pass
+        # silently — the stale duplicate this delete exists to clear
+        # would survive
+        if not fs.delete(d, True):
+            raise RuntimeError(f"failed to delete emptied partition directory {d}")
+        # walk up multi-column partition paths and drop parent
+        # directories the leaf delete emptied (day=a/region=us →
+        # day=a), so directory-listing tooling never sees hollow
+        # intermediate levels.
+        for depth in range(len(segs) - 1, 0, -1):
+            parent = Path(target_path, "/".join(segs[:depth]))
+            if fs.exists(parent) and len(fs.listStatus(parent)) == 0:
+                fs.delete(parent, False)
+            else:
+                break
+    return len(touched_rows)
+
+
+def latest_wins(df: DataFrame, key_cols: tuple[str, ...], *order) -> DataFrame:
+    """One row per `key_cols`: the first by the `order` Columns (e.g.
+    `F.col("version").desc()`).
+
+    Ties in `order` are broken by a hash of the whole row, which makes
+    the pick a pure function of row values for ANY input, not just
+    well-behaved ones: a replayed batch can carry the same key twice at
+    the same version (even in different partitions), and a tie left to
+    shuffle fetch order could pick a different winner on replay than on
+    the first run. xxhash64 rejects map-typed columns at analysis time;
+    for schemas containing one, the row's JSON rendering is hashed
+    instead (slower, but the determinism guarantee must hold for every
+    schema the warehouse accepts)."""
+    row_cols = [F.col(c) for c in df.columns]
+    if any("map<" in f.dataType.simpleString() for f in df.schema.fields):
+        tiebreak = F.xxhash64(F.to_json(F.struct(*row_cols)))
+    else:
+        tiebreak = F.xxhash64(*row_cols)
+    w = Window.partitionBy(*key_cols).orderBy(*order, tiebreak)
+    return (
+        df.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
+
+
 def merge_upsert(
     target_path: str,
     updates: DataFrame,
@@ -226,9 +397,10 @@ def merge_upsert(
     partition): the latest-wins window spans the whole touched slice,
     so the losing row simply isn't rewritten — and if that empties a
     touched partition, its directory is explicitly deleted after the
-    write (r5 ADVICE fix: dynamic partition-overwrite only rewrites
-    partitions that still have rows, which would otherwise leave the
-    stale copy on disk).
+    write: dynamic partition-overwrite only rewrites partitions that
+    still have rows, which would otherwise leave the stale copy on
+    disk. `_rewrite` finds such partitions by listing them before the
+    write.
 
     Concurrency contract (r6): ONE writer per table. The whole merge is
     a read-modify-write, so interleaved merges would lose updates
@@ -274,19 +446,7 @@ def merge_upsert(
                 f"delete_col {delete_col!r} must be a dedicated marker "
                 "column, not a key/version/partition column"
             )
-    # Alongside each raw partition value, collect Spark's OWN string
-    # rendering of it (cast-to-string): the emptied-directory delete at
-    # the bottom must reproduce the writer's directory naming exactly,
-    # and Python str() diverges from it for non-string types (True vs
-    # 'true' for booleans, microsecond formatting for timestamps).
-    touched = updates.select(
-        *partition_cols,
-        *[
-            F.col(c).cast("string").alias(f"__str_{c}")
-            for c in partition_cols
-        ],
-    ).distinct()
-    touched_rows = touched.collect()  # small: one row per touched partition
+    touched_rows = _touched_rows(updates, partition_cols)
     if not touched_rows:
         return 0
     for r in touched_rows:
@@ -297,22 +457,8 @@ def merge_upsert(
                 "partition columns must be non-NULL for copy-on-write MERGE"
             )
 
-    # ---- single-writer critical section -------------------------------
-    # Everything between the target read and the emptied-partition
-    # delete is read-modify-write and must not interleave with another
-    # writer (shared across merge_upsert and delete_where — they mutate
-    # the same partitions, so they exclude each other too).
-    lock_fs, lock, lock_mtime = _acquire_lock(
-        spark, target_path, break_stale_lock_s
-    )
-    try:
-        # mergeSchema only when evolving: it reads every file footer,
-        # which a 100 TB table should not pay on the default path
-        target = (
-            spark.read.option("mergeSchema", "true").parquet(target_path)
-            if schema_evolution
-            else spark.read.parquet(target_path)
-        )
+    with _locked(spark, target_path, break_stale_lock_s):
+        target = _read_target(spark, target_path, schema_evolution)
 
         # ---- schema contract -----------------------------------------
         if delete_col is not None and delete_col in target.columns:
@@ -346,22 +492,7 @@ def merge_upsert(
                 "schema_evolution=True to evolve the table"
             )
 
-        # touched-partition predicate: a disjunction of partition-value
-        # conjunctions, which Catalyst folds into partition pruning
-        # (PartitionFilters in the scan). eqNullSafe so that target rows
-        # sitting in a NULL partition (written before the non-NULL guard, or
-        # by another writer) evaluate to a definite false, not NULL — the
-        # stability check below negates this predicate, and ~NULL would
-        # silently drop those rows from the foreign set (r5 ADVICE fix; the
-        # old `isin` formulation had exactly that blind spot).
-        pred = None
-        for r in touched_rows:
-            conj = None
-            for c in partition_cols:
-                term = F.col(c).eqNullSafe(F.lit(r[c]))
-                conj = term if conj is None else (conj & term)
-            pred = conj if pred is None else (pred | conj)
-
+        pred = _partition_pred(touched_rows, partition_cols)
         if check_partition_stability:
             # keys present in the table but owned by a NON-touched partition
             # (including a NULL one) must not appear in the update batch.
@@ -396,37 +527,15 @@ def merge_upsert(
                 for f in updates.schema.fields
             ]
         )
-
-        merged = existing.withColumn("_src", F.lit(0)).unionByName(
-            updates.withColumn("_src", F.lit(1))
+        # at equal version the update row beats the existing one. The
+        # marker is NULL on update rows, and xxhash64 skips NULLs, so
+        # ties among update rows break on the same row hash as the
+        # bootstrap batch of streaming/cdc.py: replays pick one winner.
+        merged = existing.withColumn("_existing", F.lit(True)).unionByName(
+            updates.withColumn("_existing", F.lit(None).cast("boolean"))
         )
-        # Window order must determinize the winner for ANY input, not just
-        # well-behaved ones: a replayed batch can carry the same key twice at
-        # the same version (even in different partitions). The plan below
-        # executes twice — once for the remaining-partitions collect, once
-        # for the write — so a tie left to shuffle fetch order could let the
-        # two executions pick DIFFERENT winners, and the emptied-partition
-        # delete would then remove the directory the write populated. The
-        # row-hash tail makes row_number a pure function of row values.
-        # xxhash64 rejects map-typed columns at analysis time; for schemas
-        # containing one, hash the row's JSON rendering instead (slower, but
-        # merge isn't a hot path and the determinism guarantee must hold for
-        # every schema the warehouse accepts).
-        row_cols = [F.col(c) for c in updates.columns]
-        if any("map<" in f.dataType.simpleString() for f in updates.schema.fields):
-            tiebreak = F.xxhash64(F.to_json(F.struct(*row_cols)))
-        else:
-            tiebreak = F.xxhash64(*row_cols)
-        w = Window.partitionBy(*key_cols).orderBy(
-            F.col(version_col).desc(),
-            F.col("_src").desc(),
-            tiebreak,
-        )
-        latest = (
-            merged.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn", "_src")
-        )
+        order = (F.col(version_col).desc(), F.col("_existing").asc_nulls_first())
+        latest = latest_wins(merged, key_cols, *order).drop("_existing")
         if delete_col is not None:
             # a winning tombstone removes its key from the rewritten
             # slice; existing rows carry a NULL marker (aligned above)
@@ -434,86 +543,7 @@ def merge_upsert(
             latest = latest.filter(
                 ~F.coalesce(F.col(delete_col).cast("boolean"), F.lit(False))
             ).drop(delete_col)
-        latest = latest.persist()  # one evaluation shared by collect + write
-        try:
-            # one row per surviving touched partition — bounded by the
-            # touched count, so the collect is driver-safe at warehouse scale
-            remaining = {
-                tuple(r[c] for c in partition_cols)
-                for r in latest.select(*partition_cols).distinct().collect()
-            }
-            overwrite_partitions(latest, target_path, partition_cols)
-        finally:
-            latest.unpersist()
-
-        # clear partitions the merge emptied (every row lost latest-wins to
-        # a row in another touched partition): dynamic overwrite never saw
-        # them, so delete their directories. Write-then-delete order keeps
-        # the table recoverable if the write fails mid-merge. Hadoop FS API,
-        # so the same code path works on HDFS/S3A, not just local disk.
-        emptied = [
-            r
-            for r in touched_rows
-            if tuple(r[c] for c in partition_cols) not in remaining
-        ]
-        _delete_partition_dirs(spark, target_path, partition_cols, emptied)
-        return len(touched_rows)
-    finally:
-        _release_lock(lock_fs, lock, lock_mtime)
-
-
-def _delete_partition_dirs(
-    spark, target_path: str, partition_cols: tuple[str, ...], rows
-) -> None:
-    """Remove the partition directories named by `rows` (which carry
-    both raw values and the writer's `__str_<col>` renderings).
-
-    Spark escapes partition values in directory names (Hive path
-    escaping: '=', ':', '%', '#', '/', control chars → %XX), so the
-    delete path must be built with the SAME escaping or it silently
-    misses the directory (fs.delete of a nonexistent path returns
-    False) and the stale copy this delete exists to clear survives.
-    Use Spark's own escapePathName so the two can never drift."""
-    if not rows:
-        return
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    esc = jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    for r in rows:
-        # a NULL partition value (possible via delete_where on tables
-        # other writers produced; merge rejects them on ingest) lands in
-        # Spark's default-partition directory
-        segs = [
-            (
-                f"{c}={esc.escapePathName(r[f'__str_{c}'])}"
-                if r[f"__str_{c}"] is not None
-                else f"{c}=__HIVE_DEFAULT_PARTITION__"
-            )
-            for c in partition_cols
-        ]
-        p = jvm.org.apache.hadoop.fs.Path(target_path, "/".join(segs))
-        fs = p.getFileSystem(hconf)
-        # An emptied partition that never existed on disk (all of a
-        # brand-new partition's rows lost latest-wins) is fine; an
-        # EXISTING directory that fails to delete is not — the stale
-        # duplicate this delete exists to clear would silently survive
-        # (r6 ADVICE fix: check the result).
-        if fs.exists(p) and not fs.delete(p, True):
-            raise RuntimeError(
-                f"failed to delete emptied partition directory {p}"
-            )
-        # walk up multi-column partition paths and drop parent
-        # directories the leaf delete emptied (day=a/region=us →
-        # day=a), so directory-listing tooling never sees hollow
-        # intermediate levels (r6 ADVICE fix).
-        for depth in range(len(segs) - 1, 0, -1):
-            parent = jvm.org.apache.hadoop.fs.Path(
-                target_path, "/".join(segs[:depth])
-            )
-            if fs.exists(parent) and len(fs.listStatus(parent)) == 0:
-                fs.delete(parent, False)
-            else:
-                break
+        return _rewrite(spark, target_path, partition_cols, touched_rows, latest)
 
 
 def delete_where(
@@ -552,67 +582,24 @@ def delete_where(
     This is also the CDC tombstone-retention primitive: see
     `purge_tombstones` for the guarded wrapper."""
     cond = F.expr(condition) if isinstance(condition, str) else condition
-    lock_fs, lock, lock_mtime = _acquire_lock(
-        spark, target_path, break_stale_lock_s
-    )
-    try:
-        target = (
-            spark.read.option("mergeSchema", "true").parquet(target_path)
-            if schema_evolved
-            else spark.read.parquet(target_path)
-        )
+    with _locked(spark, target_path, break_stale_lock_s):
+        target = _read_target(spark, target_path, schema_evolved)
         # discovery uses the RAW condition: filter() already excludes
         # NULL-evaluating rows, and — unlike a coalesce(cond, false)
         # wrapper — the bare predicate stays pushable, so a condition
         # constraining partition columns prunes this scan at planning
         # time (plan-gated in tests/test_plans.py; the first draft
         # wrapped it and silently scanned the whole table)
-        touched_rows = (
-            target.filter(cond)
-            .select(
-                *partition_cols,
-                *[
-                    F.col(c).cast("string").alias(f"__str_{c}")
-                    for c in partition_cols
-                ],
-            )
-            .distinct()
-            .collect()  # small: one row per touched partition
-        )
+        touched_rows = _touched_rows(target.filter(cond), partition_cols)
         if not touched_rows:
             return 0
-        pred = None
-        for r in touched_rows:
-            conj = None
-            for c in partition_cols:
-                term = F.col(c).eqNullSafe(F.lit(r[c]))
-                conj = term if conj is None else (conj & term)
-            pred = conj if pred is None else (pred | conj)
         # the keep side must RETAIN NULL-evaluating rows (~NULL is NULL
         # and would drop them), hence the coalesce — pruning is already
-        # done by `pred`, so the wrapper costs nothing here
-        keep = (
-            target.filter(pred)
-            .filter(~F.coalesce(cond.cast("boolean"), F.lit(False)))
-            .persist()
-        )
-        try:
-            remaining = {
-                tuple(r[c] for c in partition_cols)
-                for r in keep.select(*partition_cols).distinct().collect()
-            }
-            overwrite_partitions(keep, target_path, partition_cols)
-        finally:
-            keep.unpersist()
-        emptied = [
-            r
-            for r in touched_rows
-            if tuple(r[c] for c in partition_cols) not in remaining
-        ]
-        _delete_partition_dirs(spark, target_path, partition_cols, emptied)
-        return len(touched_rows)
-    finally:
-        _release_lock(lock_fs, lock, lock_mtime)
+        # done by the partition predicate, so the wrapper costs nothing
+        pred = _partition_pred(touched_rows, partition_cols)
+        matched = F.coalesce(cond.cast("boolean"), F.lit(False))
+        keep = target.filter(pred).filter(~matched)
+        return _rewrite(spark, target_path, partition_cols, touched_rows, keep)
 
 
 def update_where(
@@ -640,15 +627,8 @@ def update_where(
     tables MUST pass `schema_evolved=True` (see delete_where — a
     plain-footer rewrite can silently drop evolved columns)."""
     cond = F.expr(condition) if isinstance(condition, str) else condition
-    lock_fs, lock, lock_mtime = _acquire_lock(
-        spark, target_path, break_stale_lock_s
-    )
-    try:
-        target = (
-            spark.read.option("mergeSchema", "true").parquet(target_path)
-            if schema_evolved
-            else spark.read.parquet(target_path)
-        )
+    with _locked(spark, target_path, break_stale_lock_s):
+        target = _read_target(spark, target_path, schema_evolved)
         bad = [c for c in assignments if c not in target.columns]
         if bad:
             raise ValueError(f"assigned column(s) {bad} not in the table")
@@ -662,21 +642,10 @@ def update_where(
         # raw condition: pushable/prunable for discovery (see
         # delete_where); the when() below already treats a NULL
         # condition as "not matched", leaving the row unmodified
-        touched_rows = (
-            target.filter(cond)
-            .select(*partition_cols)
-            .distinct()
-            .collect()
-        )
+        touched_rows = _touched_rows(target.filter(cond), partition_cols)
         if not touched_rows:
             return 0
-        pred = None
-        for r in touched_rows:
-            conj = None
-            for c in partition_cols:
-                term = F.col(c).eqNullSafe(F.lit(r[c]))
-                conj = term if conj is None else (conj & term)
-            pred = conj if pred is None else (pred | conj)
+        pred = _partition_pred(touched_rows, partition_cols)
         updated = target.filter(pred).select(
             *[
                 (
@@ -694,12 +663,7 @@ def update_where(
                 for c, f in zip(target.columns, target.schema.fields)
             ]
         )
-        # an update never empties a partition (rows are modified, not
-        # removed), so no emptied-directory pass is needed
-        overwrite_partitions(updated, target_path, partition_cols)
-        return len(touched_rows)
-    finally:
-        _release_lock(lock_fs, lock, lock_mtime)
+        return _rewrite(spark, target_path, partition_cols, touched_rows, updated)
 
 
 def purge_tombstones(
@@ -754,4 +718,4 @@ def read_merged(spark, target_path: str) -> DataFrame:
     instead of silently narrowing the schema to whichever footer the
     plain reader sampled. Pay it only on evolved tables — it lists and
     reads all footers."""
-    return spark.read.option("mergeSchema", "true").parquet(target_path)
+    return _read_target(spark, target_path, True)

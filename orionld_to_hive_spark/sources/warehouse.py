@@ -242,28 +242,6 @@ def load_docs_spread(spark: SparkSession, sf_dir: str, *cols: str) -> DataFrame:
     return load_spread(spark, sf_dir, "documents", *(cols or ("doc_id", "text")))
 
 
-def clear_table_cache(spark: SparkSession, sf_dir: str | None = None) -> int:
-    """Invalidate load_table's per-session plan memo (all entries, or
-    only those under `sf_dir`). The cache is safe ONLY because warehouse
-    tables are immutable for a session's lifetime — any future writer
-    that rewrites <name>.parquet under an sf_dir MUST call this before
-    readers touch the table again, or they'll replay a stale file
-    listing. Returns the number of entries dropped (enforcement hook
-    for that contract, not just documentation)."""
-    cache = getattr(spark, "_graft_table_cache", None)
-    if not cache:
-        return 0
-    if sf_dir is None:
-        n = len(cache)
-        cache.clear()
-        return n
-    root = os.path.abspath(sf_dir)
-    doomed = [k for k in cache if k[0] == root]
-    for k in doomed:
-        del cache[k]
-    return len(doomed)
-
-
 def _load_table_cached(spark, cache, sf_dir, name) -> DataFrame:
     norm_cols = _NORM_TS_COLS.get(name, ())
     # current_timezone() in the NTZ normalization folds at analysis

@@ -50,10 +50,10 @@ op streams) add on top.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from orionld_to_hive_spark.sources.merge import merge_upsert
+from orionld_to_hive_spark.sources.merge import latest_wins, merge_upsert
 from orionld_to_hive_spark.sources.warehouse import write_partitioned
 
 
@@ -91,31 +91,6 @@ class StreamingCdcApplier:
                 return True
         return False
 
-    def _batch_winners(self, batch_df: DataFrame) -> DataFrame:
-        """Per-key latest-wins winners of ONE batch, tombstones KEPT —
-        merge_upsert's ordering contract (version desc, then a pure
-        row-hash so replays pick identical winners)."""
-        # xxhash64 rejects map-typed columns at analysis time — fall
-        # back to hashing the JSON rendering, exactly like merge_upsert
-        # (the merge path of every later batch), so a map-carrying
-        # changelog doesn't die on the bootstrap batch alone
-        row_cols = [F.col(c) for c in batch_df.columns]
-        if any(
-            "map<" in f.dataType.simpleString()
-            for f in batch_df.schema.fields
-        ):
-            tiebreak = F.xxhash64(F.to_json(F.struct(*row_cols)))
-        else:
-            tiebreak = F.xxhash64(*row_cols)
-        w = Window.partitionBy(*self.key_cols).orderBy(
-            F.col(self.version_col).desc(), tiebreak
-        )
-        return (
-            batch_df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-
     def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         if not batch_df.take(1):
             return
@@ -132,8 +107,13 @@ class StreamingCdcApplier:
                 self.partition_cols,
             )
         else:
+            # per-key winners of ONE batch, tombstones KEPT — the
+            # same `latest_wins` window the merge path of every later
+            # batch runs, so replays pick identical winners
             write_partitioned(
-                self._batch_winners(batch_df),
+                latest_wins(
+                    batch_df, self.key_cols, F.col(self.version_col).desc()
+                ),
                 self.target_path,
                 partition_cols=self.partition_cols,
             )

@@ -201,6 +201,18 @@ def test_xref_mutated_base_never_crashes(pos, xor, even):
         pass
 
 
+def test_xref_self_referencing_length_is_refused():
+    """A one-byte mutation of the even-predictor base turns object 6's
+    `/Length 9 0 R` into `/Length 6 0 R`: resolving the length would
+    resolve the stream itself again. It must be refused, not recursed
+    into until RecursionError."""
+    b = bytearray(_BASE_EVEN)
+    b[341] ^= 0x0F
+    assert b"/Length 6 0 R" in b
+    with pytest.raises(ValueError, match="cycle"):
+        parse_pdf_meta(bytes(b))
+
+
 def test_hybrid_reference_merge():
     """§7.5.8.4: two objects exist only in the /XRefStm stream — the
     merged view must see them; severing /XRefStm must lose exactly

@@ -11,9 +11,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from orionld_to_hive_spark.schemas import NGSI_NOTIFICATION_SCHEMA
+from orionld_to_hive_spark.sources import merge
 from orionld_to_hive_spark.streaming.debounce import debounce_batch, debounce_stream
 from orionld_to_hive_spark.streaming.ingest import parse_notifications, start_ingest
-from orionld_to_hive_spark.streaming.upsert import latest_state
 
 
 def _notification(entities) -> str:
@@ -173,7 +173,7 @@ def test_ingest_stream_end_to_end_exactly_once(spark, tmp_path):
     assert final.count() == 3
 
     # latest-wins upsert view: one row per entity, the newest value
-    latest = latest_state(final, "entityid", "ts")
+    latest = merge.latest_wins(final, ("entityid",), F.col("ts").desc())
     kitchen = [r for r in latest.collect() if r.room == "kitchen"]
     assert len(kitchen) == 1 and kitchen[0].temperature == 21.0
 
