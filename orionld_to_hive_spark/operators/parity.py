@@ -44,15 +44,23 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
+def _by_hour(df: DataFrame) -> DataFrame:
+    # hour_bucket ∈ [0, 24): one partition is bounded at any scale, so a
+    # local sort replaces orderBy's sampling job and range exchange. The
+    # final aggregate runs in that one task, over ≤24 partials per map task.
+    return df.coalesce(1).sortWithinPartitions("hour_bucket")
+
+
 # --------------------------------------------------------------------------
 # Q1 — time-range filter scan (reference `hive.py:50-54`).
 # The reference filters on unix_timestamp(ts) — a function of the column —
 # which defeats pushdown (its own report shows Q1 doing a full scan,
 # SURVEY.md §4). We filter on the bare column instead: semantically
 # identical (floor(epoch(ts)) >= B  ⟺  ts >= B for integer-second B) and
-# Catalyst pushes `ts >= literal` into the parquet scan, where min/max
-# row-group stats skip everything but the window's tail. At 100 TB this
-# is the difference between reading the table and reading one file.
+# Catalyst lists `ts >= literal` in the parquet scan's PushedFilters.
+# Known limit: `events.ts` is stored as TIMESTAMP_NTZ, and Spark 4.1.2
+# skips no row group for an NTZ predicate, so Q1 still reads every row
+# (200 000 scanned for 269 returned on perfbench's `sensor_queries`).
 def q1_time_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datetime import datetime, timedelta
 
@@ -80,10 +88,10 @@ WHERE ts >= TIMESTAMP '{AS_OF}' - INTERVAL 1 HOUR
 # combine reduces 100 TB of rows to 24·#tasks partials before the shuffle.
 def q2_hourly_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = _t(spark, sf_dir, "events")
-    return (
-        events.groupBy(F.hour("ts").alias("hour_bucket"))
-        .agg(davg("value", "avg_value"), F.count(F.lit(1)).alias("n"))
-        .orderBy("hour_bucket")
+    return _by_hour(
+        events.groupBy(F.hour("ts").alias("hour_bucket")).agg(
+            davg("value", "avg_value"), F.count(F.lit(1)).alias("n")
+        )
     )
 
 
@@ -99,36 +107,36 @@ ORDER BY 1
 
 # --------------------------------------------------------------------------
 # Q3 — N-way UNION ALL + CUBE multi-aggregate (reference `hive.py:61-83`).
-# The union of literal-tagged branches reproduces U1/P3 exactly; Catalyst
-# collapses the N filtered scans of the same file back into parquet scans
-# with pushed disjoint predicates. grouping() flags disambiguate rolled-up
-# NULLs from data NULLs (SURVEY.md §7 hard-part #2).
+# Each reference branch tags the rows of one room with its literal name,
+# and the branches are disjoint, so their union is one scan filtered to
+# `event_type IN EVENT_TAGS` with tag = event_type. Spark does not merge
+# the N filtered scans of a literal union: each would read the whole file.
+# grouping() flags disambiguate rolled-up NULLs from data NULLs (SURVEY.md
+# §7 hard-part #2).
 def q3_union_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = _t(spark, sf_dir, "events")
-    branches = [
-        events.filter(F.col("event_type") == tag).select(
-            F.lit(tag).alias("tag"),
-            F.hour("ts").alias("hr"),
-            F.col("value"),
-        )
-        for tag in EVENT_TAGS
-    ]
-    unioned = reduce(DataFrame.unionByName, branches)
-    # Pre-aggregate to base (tag, hr) groups BEFORE the CUBE: all four
-    # measures are re-aggregable (decimal sums are associative), so the
+    tagged = events.filter(F.col("event_type").isin(*EVENT_TAGS)).select(
+        F.col("event_type").alias("tag"),
+        F.hour("ts").alias("hr"),
+        F.col("value"),
+    )
+    # Pre-aggregate to base (tag, hr) groups BEFORE the CUBE: every
+    # measure is re-aggregable (decimal sums are associative), so the
     # Expand operator replicates #groups rows (≤ tags×24) instead of
     # every input row — at 100 TB that's the difference between a 4×
     # fact-table blowup and a no-op.
-    base = unioned.groupBy("tag", "hr").agg(
+    base = tagged.groupBy("tag", "hr").agg(
         F.sum(F.col("value").cast("decimal(27,6)")).alias("_s"),
         F.min("value").alias("_min"),
         F.max("value").alias("_max"),
+        F.count("value").alias("_nv"),
         F.count(F.lit(1)).alias("_n"),
     )
     return (
         base.cube("tag", "hr")
         .agg(
-            (F.sum("_s").cast("double") / F.sum("_n")).alias("avg_value"),
+            # AVG divides by the non-NULL count, COUNT(*) counts every row
+            (F.sum("_s").cast("double") / F.sum("_nv")).alias("avg_value"),
             F.min("_min").alias("min_value"),
             F.max("_max").alias("max_value"),
             F.coalesce(F.sum("_n"), F.lit(0)).alias("n"),
@@ -163,30 +171,33 @@ GROUP BY CUBE (tag, hr)
 
 # --------------------------------------------------------------------------
 # Q4 — inner equi-join of two aggregated subqueries (reference
-# `hive.py:84-98`). Both sides aggregate to ≤24 rows before the join, so
-# AQE converts the join to broadcast-hash at runtime — the shape that was
-# the reference's most expensive query (PDF §5) is O(agg) here.
+# `hive.py:84-98`), the reference's most expensive query (PDF §5). Both
+# sides group the same table by the same key, so the join is conditional
+# aggregation over one scan: per tag, an average over that tag's values
+# and a count of that tag's rows. The inner join keeps an hour iff its
+# key is not NULL (the ts filter) and both sides have a row for it (the
+# count filter). An hour whose values are all NULL stays, with a NULL
+# average.
 def q4_join_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = _t(spark, sf_dir, "events")
-
-    def hourly(tag: str, alias: str) -> DataFrame:
-        return (
-            events.filter(F.col("event_type") == tag)
-            .groupBy(F.hour("ts").alias("hour_bucket"))
-            .agg(davg("value", alias))
+    tag = F.col("event_type")
+    hourly = (
+        events.filter(tag.isin("click", "view") & F.col("ts").isNotNull())
+        .groupBy(F.hour("ts").alias("hour_bucket"))
+        .agg(
+            davg(F.when(tag == "click", F.col("value")), "avg_click"),
+            davg(F.when(tag == "view", F.col("value")), "avg_view"),
+            F.count(F.when(tag == "click", 1)).alias("_n_click"),
+            F.count(F.when(tag == "view", 1)).alias("_n_view"),
         )
-
-    clicks = hourly("click", "avg_click")
-    views = hourly("view", "avg_view")
-    return (
-        clicks.join(views, "hour_bucket", "inner")
-        .select(
+    )
+    return _by_hour(
+        hourly.filter((F.col("_n_click") > 0) & (F.col("_n_view") > 0)).select(
             "hour_bucket",
             "avg_click",
             "avg_view",
             (F.col("avg_click") - F.col("avg_view")).alias("click_minus_view"),
         )
-        .orderBy("hour_bucket")
     )
 
 
@@ -423,9 +434,10 @@ GROUP BY 1
 
 
 # --------------------------------------------------------------------------
-# SQL-surface twin of Q2: the same plan expressed as SQL text over a
+# SQL-surface twin of Q2: the same query expressed as SQL text over a
 # catalog view (capability parity with the reference's HiveQL interface,
-# `hive.py:55-60`; Catalyst produces the identical plan either way).
+# `hive.py:55-60`). Its ORDER BY keeps the reference's global sort, where
+# q2_hourly_avg sorts its ≤24 rows in one partition.
 def q2_hourly_avg_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     from orionld_to_hive_spark.catalog import register_warehouse
 
@@ -447,8 +459,10 @@ def q2_hourly_avg_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
 # spark.sql twins of Q1/Q3/Q4 (Q2's lives above): SURVEY §7 requires
 # every flagship query on BOTH the DataFrame API and the SQL-string
 # surface (the reference's whole interface is HiveQL text). The SQL
-# strings are ANSI enough that the very same text is the DuckDB oracle;
-# Catalyst compiles them to the same plans as the DataFrame chains.
+# strings are ANSI enough that the very same text is the DuckDB oracle.
+# The twins keep the reference's HiveQL shape: Q3's five-branch UNION ALL
+# and Q4's join of two aggregates, where q3_union_cube and q4_join_hourly
+# read `events` once on purpose — the twins prove those rewrites equal.
 def _sql_on_events(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
     from orionld_to_hive_spark.catalog import register_warehouse
 

@@ -294,10 +294,13 @@ def load_time_range(
     scan. Instead the predicate is phrased against the raw stored type —
     int64 nanos vs the boundary in nanos (exact: floor(ns/1000) >= B·10⁶
     ⟺ ns >= B·10⁹ for whole-second B), or a TIMESTAMP_NTZ literal vs the
-    naive column — which Catalyst pushes into the scan, where min/max
-    row-group stats skip everything outside the window; the
+    naive column — which Catalyst lists in the scan's PushedFilters; the
     normalization cast happens above the filtered scan. Native timestamp
     columns just get the direct pushable comparison.
+
+    Known limit: Spark 4.1.2 skips no parquet row group for a
+    TIMESTAMP_NTZ predicate, so the NTZ branch still reads every row
+    group and filters row by row.
     """
     from datetime import datetime, timezone
 

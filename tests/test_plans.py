@@ -3,6 +3,8 @@ properties that decide whether a plan survives 100× scale."""
 
 from __future__ import annotations
 
+import re
+
 from orionld_to_hive_spark.operators import cubes, parity, sketches, temporal, tpch, tpch2
 from orionld_to_hive_spark.plans.explain import (
     count_shuffles,
@@ -31,10 +33,24 @@ def test_q1_reads_only_projected_columns(spark, sf_smoke):
     assert set(cols) == {"event_id", "value", "ts"}, cols
 
 
-def test_q4_join_broadcasts(spark, sf_smoke):
-    df = parity.q4_join_hourly(spark, sf_smoke)
-    df.collect()  # AQE decides at runtime; materialize first
-    assert has_broadcast_join(df)
+def _executed_ops(df) -> list[str]:
+    df.collect()  # AQE fixes the final plan at runtime; materialize first
+    return re.findall(r"^\(\d+\) (\S+(?: parquet)?)", formatted(df), re.M)
+
+
+def test_q3_single_scan(spark, sf_smoke):
+    # the five tag branches are one filtered scan, not a five-way union
+    ops = _executed_ops(parity.q3_union_cube(spark, sf_smoke))
+    assert ops.count("Scan parquet") == 1, ops
+    assert "Union" not in ops, ops
+
+
+def test_q4_single_scan_no_join(spark, sf_smoke):
+    # the join of the click and view aggregates is conditional
+    # aggregation over one scan: no second scan and no join node
+    ops = _executed_ops(parity.q4_join_hourly(spark, sf_smoke))
+    assert ops.count("Scan parquet") == 1, ops
+    assert not [o for o in ops if "Join" in o], ops
 
 
 def test_tpch_q3_broadcasts_dimension(spark, sf_smoke):
