@@ -47,6 +47,10 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # INT64 timestamps carry parquet min/max statistics (INT96 has
+        # none), so row groups can be skipped on `ts`; writes read this
+        # from the session only
+        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -11,9 +11,10 @@ sparse wide readings schema (SURVEY.md §1.1), and write once,
 partitioned by room and sorted by ts within files for row-group
 skipping (S3).
 
-At 100 TB: the scan parallelizes per-file-split, the only wide
-operation is the write's partitionBy — there is NO shuffle unless
-`compact_files=True` asks for one explicit repartition by room.
+At 100 TB: the scan parallelizes per-file-split, and the one wide
+operation is the writer's rebalance exchange on room
+(`write_partitioned`), which AQE splits where a room outgrows the
+advisory partition size.
 """
 
 from __future__ import annotations
@@ -30,14 +31,18 @@ _FILE_RE = r"([A-Za-z0-9]+)_([A-Za-z]+)\.csv$"
 
 def read_raw_measurements(spark: SparkSession, glob_path: str) -> DataFrame:
     """Headerless (epoch<TAB>value) scan with malformed-line drop and
-    filename-derived room/sensor columns."""
+    filename-derived room/sensor columns.
+
+    Identity comes from the bare file name (`_metadata.file_name`), not
+    the full URI of `input_file_name()`: the regex then never scans the
+    directory part, whatever underscores or `.csv` it holds."""
     df = (
         spark.read.schema(RAW_TSV_SCHEMA)
         .option("sep", "\t")
         .option("mode", "DROPMALFORMED")
         .csv(glob_path)
     )
-    fname = F.input_file_name()
+    fname = F.col("_metadata.file_name")
     return df.select(
         F.lower(F.regexp_extract(fname, _FILE_RE, 1)).alias("room"),
         F.lower(F.regexp_extract(fname, _FILE_RE, 2)).alias("sensor"),
@@ -52,7 +57,6 @@ def ingest_measurements(
     out_path: str,
     sample_fraction: float = 0.5,
     seed: int = 42,
-    compact_files: bool = False,
 ) -> DataFrame:
     """Full insert.py-equivalent pipeline; returns the frame it wrote.
 
@@ -85,9 +89,6 @@ def ingest_measurements(
         ),
         F.timestamp_seconds("epoch_s").alias("ts"),
     )
-    if compact_files:
-        # one shuffle to get one output file chain per room partition
-        readings = readings.repartition("room")
     write_partitioned(
         readings, out_path, partition_cols=("room",), sort_cols=("ts",),
         mode="overwrite",

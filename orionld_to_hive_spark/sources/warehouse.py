@@ -401,14 +401,24 @@ def write_partitioned(
 ) -> None:
     """Warehouse sink (stands in for reference S3/S4 HBase puts).
 
-    Partition columns give partition pruning; sortWithinPartitions gives
-    parquet min/max row-group skipping on the sort key — the Spark
+    With partition columns, rows are rebalanced on them (a `rebalance`
+    hint: each partition value goes to one reducer, and AQE splits a
+    value larger than the advisory partition size) and sorted by
+    `(*partition_cols, *sort_cols)` within each task. The partition
+    prefix meets the partitioned writer's own required ordering, so
+    Spark adds no sort of its own that would drop the sort-key order,
+    and each file is sorted on the sort key. That sort is the Spark
     equivalent of the reference's rowkey clustering
-    (`{entity}_{timestamp}` keys, reference `insert.py:85`).
+    (`{entity}_{timestamp}` keys, reference `insert.py:85`). Parquet
+    min/max row-group skipping on a timestamp sort key needs INT64
+    timestamps (`TIMESTAMP_MICROS`, set in `session.get_spark`); INT96
+    columns carry no usable statistics.
     """
     out = df
-    if sort_cols:
-        out = out.sortWithinPartitions(*sort_cols)
+    if partition_cols:
+        out = out.hint("rebalance", *partition_cols)
+    if partition_cols or sort_cols:
+        out = out.sortWithinPartitions(*partition_cols, *sort_cols)
     writer = out.write.mode(mode)
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)

@@ -11,8 +11,12 @@ engine code:
   readStream(json, NGSI schema)            # S6
     → explode(data[])                      # T1: batched entity updates
     → normalize to readings rows           # F11: Property.value extraction
-    → keyed debounce (applyInPandasWithState)   # T2, see debounce.py
-    → writeStream.foreachBatch(append parquet)  # S4, checkpointed
+    → writeStream.foreachBatch(write_partitioned)  # S4, checkpointed
+
+Each micro-batch goes through the batch path's writer, so streamed and
+batch readings share one layout: room-partitioned, one ts-sorted file
+per room per batch at this size. The reference's per-entity throttle
+(T2) is not on this path; `debounce.py` has the keyed operator.
 
 Checkpointing upgrades the reference's at-most-once delivery (HTTP 200
 regardless of write outcome, `subscriber.py:123`) to exactly-once into
@@ -30,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from orionld_to_hive_spark.schemas import NGSI_NOTIFICATION_SCHEMA, SENSORS
+from orionld_to_hive_spark.sources.warehouse import write_partitioned
 
 
 def parse_notifications(df: DataFrame) -> DataFrame:
@@ -76,17 +81,14 @@ def start_ingest(
 ):
     """Run the notification stream into the parquet warehouse.
 
-    foreachBatch + checkpoint = exactly-once appends; partitioned by
-    room like the batch path so downstream queries prune identically.
+    foreachBatch + checkpoint = exactly-once appends, each through the
+    batch path's `write_partitioned`, so downstream queries prune and
+    skip identically on both.
     """
     parsed = read_notification_stream(spark, in_dir)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.write.mode("append")
-            .partitionBy("room")
-            .parquet(out_path)
-        )
+        write_partitioned(batch_df, out_path, ("room",), ("ts",))
 
     writer = (
         parsed.writeStream.outputMode("append")

@@ -29,9 +29,9 @@ BATH_BRIGHT = """1489017527\t12.82
 """
 
 
-def _write_fixtures(tmp_path) -> str:
-    d = tmp_path / "measurements"
-    d.mkdir()
+def _write_fixtures(tmp_path, subdir: str = "measurements") -> str:
+    d = tmp_path / subdir
+    d.mkdir(parents=True)
     (d / "Kitchen_Temperature.csv").write_text(KITCHEN_TEMP)
     (d / "Room1_Humidity.csv").write_text(ROOM1_HUM)
     (d / "Bathroom_Brightness.csv").write_text(BATH_BRIGHT)
@@ -48,6 +48,31 @@ def test_raw_scan_drops_malformed_and_infers_identity(spark, tmp_path):
     assert {r.sensor for r in rows} == {"temperature", "humidity", "brightness"}
     assert all(r.room in ("kitchen", "room1", "bathroom") for r in rows)
     assert len(kitchen) >= 4
+
+
+def test_identity_ignores_directory_names(spark, tmp_path):
+    """Underscores and a `.csv`-like segment in the directory path leave
+    (room, sensor) as they are: identity is read from the bare file
+    name, never from the full path."""
+    plain = read_raw_measurements(spark, _write_fixtures(tmp_path))
+    odd = read_raw_measurements(
+        spark, _write_fixtures(tmp_path, "sensor_ingest-1/a_b.csv.d")
+    )
+
+    def rows(df):
+        return sorted(
+            (r.room, r.sensor, r.epoch_s, r.value) for r in df.collect()
+        )
+
+    got = rows(odd)
+    assert got == rows(plain)
+    assert {(r[0], r[1]) for r in got} == {
+        ("kitchen", "temperature"),
+        ("room1", "humidity"),
+        ("bathroom", "brightness"),
+    }
+    plan = odd._jdf.queryExecution().optimizedPlan().toString()
+    assert "input_file_name" not in plan.lower()
 
 
 def test_ingest_end_to_end(spark, tmp_path):
