@@ -45,6 +45,7 @@ north-star capability per SURVEY.md §6/BASELINE.json.
 
 from __future__ import annotations
 
+import functools
 import struct
 from typing import Iterator, NamedTuple
 
@@ -433,7 +434,10 @@ def _decode_jpeg_impl(payload: bytes) -> JpegImage:
 # streams in tests/test_opt_r14.py (and every pre-existing jpeg test
 # now exercises the dispatch).
 
-_LUT16_CACHE: dict = {}
+# Each entry holds 256 KB of int16 arrays. Corpus workloads reuse a
+# handful of Huffman tables; the cap bounds a stream of payloads that
+# each bring their own.
+_LUT16_CACHE_MAX = 16
 
 
 def _lut16(table) -> tuple:
@@ -441,20 +445,20 @@ def _lut16(table) -> tuple:
     window; length 0 marks windows whose prefix decodes to no code.
     Canonical codes are prefix-free, so the per-code ranges are
     disjoint. Cached by table content (tables are rebuilt per payload
-    but shared across a corpus)."""
+    but shared across a corpus), least recently used evicted first."""
     _lut, slow = table
-    key = tuple(sorted(slow.items()))
-    hit = _LUT16_CACHE.get(key)
-    if hit is not None:
-        return hit
+    return _lut16_of(tuple(sorted(slow.items())))
+
+
+@functools.lru_cache(maxsize=_LUT16_CACHE_MAX)
+def _lut16_of(codes: tuple) -> tuple:
     val = np.zeros(1 << 16, dtype=np.int16)
     ln = np.zeros(1 << 16, dtype=np.int16)
-    for (length, code), v in slow.items():
+    for (length, code), v in codes:
         base = code << (16 - length)
         span = 1 << (16 - length)
         val[base : base + span] = v
         ln[base : base + span] = length
-    _LUT16_CACHE[key] = (val, ln)
     return val, ln
 
 

@@ -58,9 +58,12 @@ def _by_hour(df: DataFrame) -> DataFrame:
 # SURVEY.md §4). We filter on the bare column instead: semantically
 # identical (floor(epoch(ts)) >= B  ⟺  ts >= B for integer-second B) and
 # Catalyst lists `ts >= literal` in the parquet scan's PushedFilters.
-# Known limit: `events.ts` is stored as TIMESTAMP_NTZ, and Spark 4.1.2
-# skips no row group for an NTZ predicate, so Q1 still reads every row
-# (200 000 scanned for 269 returned on perfbench's `sensor_queries`).
+# The filter applies to the table plan memoized by `load_table`, so Q1
+# runs no schema-inference job of its own.
+# Known limit: `events.ts` is stored without UTC adjustment. It is typed
+# TIMESTAMP at the scan, but Spark 4.1.2 skips no row group for the
+# predicate on it, so Q1 still reads every row (200 000 scanned for 269
+# returned on perfbench's `sensor_queries`).
 def q1_time_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datetime import datetime, timedelta
 

@@ -7,13 +7,15 @@ column pruning, and min/max row-group skipping that the reference's
 string-cell HBase scan could never have (SURVEY.md §4).
 
 Also normalizes physical-format variation in the driver testdata's
-`events.ts` across regenerations: INT64 TIMESTAMP(NANOS) (r1; Spark's
-vectorized reader rejects it — read nanos as long via legacy conf, then
-truncate to µs) and TIMESTAMP(MICROS) without UTC adjustment (r2; Spark
-reads TIMESTAMP_NTZ). Both are cast to the session-UTC TIMESTAMP type so
-every downstream operator (epoch math via unix_micros, range frames,
-window() buckets) sees one stable type with values identical to what
-DuckDB's reader produces.
+`events.ts` across regenerations, so every downstream operator (epoch
+math via unix_micros, range frames, window() buckets) sees one TIMESTAMP
+type with values identical to what DuckDB's reader produces:
+  - TIMESTAMP(MICROS) without UTC adjustment (r2 onward; Spark infers
+    TIMESTAMP_NTZ) is typed TIMESTAMP at the scan, the way a Hive
+    external table types its stored cells on read. The reader keeps the
+    stored µs, so no per-row conversion runs.
+  - INT64 TIMESTAMP(NANOS) (r1; Spark's vectorized reader rejects it) is
+    read as long via legacy conf and truncated to µs per row.
 """
 
 from __future__ import annotations
@@ -22,6 +24,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 TABLE_NAMES = (
     "region",
@@ -37,13 +40,14 @@ TABLE_NAMES = (
 )
 
 # Timestamp columns whose physical encoding varies across testdata
-# regenerations (INT64 nanos / µs without UTC adjustment); normalized to
-# session-UTC TIMESTAMP on load.
+# regenerations (INT64 nanos / µs without UTC adjustment); loaded as
+# TIMESTAMP.
 _NORM_TS_COLS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one warehouse table; normalizes variant timestamp columns.
+    """Read one warehouse table; variant timestamp columns load as
+    TIMESTAMP (naive µs retyped at the scan, nanos converted per row).
 
     The resolved DataFrame (an immutable logical plan) is memoized on
     the session object: `spark.read.parquet` costs ~100 ms of
@@ -55,12 +59,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     mutable tables (merge, snapshots, incremental) use
     `spark.read.parquet` directly and are unaffected. Keying the cache
     on the session instance (not a module global) ties its lifetime to
-    the session, so recreated test sessions never see foreign plans."""
-    cache = getattr(spark, "_graft_table_cache", None)
-    if cache is None:
-        cache = {}
-        spark._graft_table_cache = cache
-    return _load_table_cached(spark, cache, sf_dir, name)
+    the session, so recreated test sessions never see foreign plans.
+    No cached plan depends on the session timezone."""
+    return _table(spark, sf_dir, name)[0]
 
 
 def scan_splits(spark: SparkSession, sf_dir: str, name: str) -> int:
@@ -242,40 +243,52 @@ def load_docs_spread(spark: SparkSession, sf_dir: str, *cols: str) -> DataFrame:
     return load_spread(spark, sf_dir, "documents", *(cols or ("doc_id", "text")))
 
 
-def _load_table_cached(spark, cache, sf_dir, name) -> DataFrame:
+def _table(
+    spark: SparkSession, sf_dir: str, name: str
+) -> tuple[DataFrame, DataFrame, tuple[str, ...]]:
+    """(table, raw scan, nanos columns), memoized on the session. The
+    raw scan still holds the nanos columns as int64 nanos; without any,
+    it is the table itself."""
+    cache = getattr(spark, "_graft_table_cache", None)
+    if cache is None:
+        cache = {}
+        spark._graft_table_cache = cache
+    key = (os.path.abspath(sf_dir), name)
+    if key not in cache:
+        cache[key] = _read_table(spark, sf_dir, name)
+    return cache[key]
+
+
+def _read_table(spark, sf_dir, name):
+    path = os.path.join(sf_dir, f"{name}.parquet")
     norm_cols = _NORM_TS_COLS.get(name, ())
-    # current_timezone() in the NTZ normalization folds at analysis
-    # time, so a tz-normalized table's plan is only valid for the
-    # session timezone it was built under — key it by tz so a runtime
-    # tz flip (tests do this; the driver's vanilla session may use any
-    # JVM tz) rebuilds instead of replaying a stale fold.
-    tz = spark.conf.get("spark.sql.session.timeZone") if norm_cols else None
-    key = (os.path.abspath(sf_dir), name, tz)
-    if key in cache:
-        return cache[key]
     if norm_cols:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    for c in norm_cols:
-        dt = dict(df.dtypes).get(c)
-        if dt == "bigint":
-            # nanos → micros, truncating like DuckDB's reader does.
-            df = df.withColumn(c, F.expr(f"timestamp_micros({c} div 1000)"))
-        elif dt == "timestamp_ntz":
-            # naive µs → the instant whose UTC wall time equals the
-            # naive value (what DuckDB's epoch_us computes). A bare
-            # cast(timestamp) would interpret the naive value in the
-            # SESSION timezone — correct only when that happens to be
-            # UTC; routing through convert_timezone('UTC', session, c)
-            # makes the epoch value timezone-independent.
-            df = df.withColumn(
-                c,
-                F.expr(
-                    f"cast(convert_timezone('UTC', current_timezone(), {c})"
-                    " as timestamp)"
-                ),
+    raw = spark.read.parquet(path)
+    dtypes = dict(raw.dtypes)
+    ntz = {c for c in norm_cols if dtypes.get(c) == "timestamp_ntz"}
+    if ntz:
+        # Spark reads the stored naive µs into TIMESTAMP unchanged: the
+        # instant whose UTC wall time is the naive value, what DuckDB's
+        # epoch_us computes, under any session timezone.
+        raw = spark.read.schema(
+            T.StructType(
+                [
+                    T.StructField(f.name, T.TimestampType(), f.nullable)
+                    if f.name in ntz
+                    else f
+                    for f in raw.schema
+                ]
             )
-    cache[key] = df
+        ).parquet(path)
+    nanos = tuple(c for c in norm_cols if dtypes.get(c) == "bigint")
+    return _micros_of_nanos(raw, nanos), raw, nanos
+
+
+def _micros_of_nanos(df: DataFrame, cols: tuple[str, ...]) -> DataFrame:
+    # nanos → micros, truncating like DuckDB's reader does.
+    for c in cols:
+        df = df.withColumn(c, F.expr(f"timestamp_micros({c} div 1000)"))
     return df
 
 
@@ -289,18 +302,17 @@ def load_time_range(
 ) -> DataFrame:
     """Time-range scan that keeps the predicate pushable.
 
-    For variant-encoded timestamp columns, a filter on the NORMALIZED
-    column is a function of the raw column and cannot reach the parquet
-    scan. Instead the predicate is phrased against the raw stored type —
-    int64 nanos vs the boundary in nanos (exact: floor(ns/1000) >= B·10⁶
-    ⟺ ns >= B·10⁹ for whole-second B), or a TIMESTAMP_NTZ literal vs the
-    naive column — which Catalyst lists in the scan's PushedFilters; the
-    normalization cast happens above the filtered scan. Native timestamp
-    columns just get the direct pushable comparison.
+    A filter on a column stored as int64 nanos would be a filter on the
+    conversion, which cannot reach the parquet scan. Instead it is
+    phrased against the raw nanos (exact: floor(ns/1000) >= B·10⁶ ⟺
+    ns >= B·10⁹ for whole-second B), which Catalyst lists in the scan's
+    PushedFilters, and the conversion happens above the filtered scan.
+    Every other timestamp column, the retyped naive ones included, is
+    TIMESTAMP at the scan and gets the direct pushable comparison.
 
-    Known limit: Spark 4.1.2 skips no parquet row group for a
-    TIMESTAMP_NTZ predicate, so the NTZ branch still reads every row
-    group and filters row by row.
+    Known limit: Spark 4.1.2 skips no parquet row group for a predicate
+    on a column stored without UTC adjustment, even read as TIMESTAMP,
+    so such a scan still reads every row group and filters row by row.
     """
     from datetime import datetime, timezone
 
@@ -308,36 +320,13 @@ def load_time_range(
         dt = datetime.fromisoformat(iso).replace(tzinfo=timezone.utc)
         return int(dt.timestamp()) * 1_000_000_000 + dt.microsecond * 1000
 
-    if ts_col in _NORM_TS_COLS.get(name, ()):
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-        raw_dt = dict(df.dtypes).get(ts_col)
-        if raw_dt == "bigint":
-            if lower_iso is not None:
-                df = df.filter(F.col(ts_col) >= F.lit(_nanos(lower_iso)))
-            if upper_iso is not None:
-                df = df.filter(F.col(ts_col) < F.lit(_nanos(upper_iso)))
-            return df.withColumn(
-                ts_col, F.expr(f"timestamp_micros({ts_col} div 1000)")
-            )
-        if raw_dt == "timestamp_ntz":
-            if lower_iso is not None:
-                df = df.filter(
-                    F.col(ts_col) >= F.lit(lower_iso).cast("timestamp_ntz")
-                )
-            if upper_iso is not None:
-                df = df.filter(
-                    F.col(ts_col) < F.lit(upper_iso).cast("timestamp_ntz")
-                )
-            # same tz-independent normalization as load_table
-            return df.withColumn(
-                ts_col,
-                F.expr(
-                    f"cast(convert_timezone('UTC', current_timezone(), {ts_col})"
-                    " as timestamp)"
-                ),
-            )
-    df = load_table(spark, sf_dir, name)
+    df, raw, nanos = _table(spark, sf_dir, name)
+    if ts_col in nanos:
+        if lower_iso is not None:
+            raw = raw.filter(F.col(ts_col) >= F.lit(_nanos(lower_iso)))
+        if upper_iso is not None:
+            raw = raw.filter(F.col(ts_col) < F.lit(_nanos(upper_iso)))
+        return _micros_of_nanos(raw, nanos)
     # boundary literals are UTC instants — build them from epoch micros so
     # a non-UTC session timezone cannot shift the cut points
     if lower_iso is not None:

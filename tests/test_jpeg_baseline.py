@@ -436,3 +436,29 @@ def test_cmyk_without_app14_is_plain_cmyk():
     px = img.samples.reshape(img.height, img.width, 4)
     assert tuple(px[0, 0, :]) == _cmyk_planes(7)
     assert tuple(px[0, 8, :]) == _cmyk_planes(200)
+
+
+def test_lut16_cache_is_bounded_and_rebuilds_equal():
+    from orionld_to_hive_spark.operators.jpeg import (
+        _LUT16_CACHE_MAX,
+        _build_huff,
+        _lut16,
+        _lut16_of,
+    )
+
+    # more distinct tables than the cap: the standard DC code lengths,
+    # each with its own symbol values
+    bits = [0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0]
+    tables = [
+        _build_huff(bits, [(k + i) % 256 for i in range(12)])
+        for k in range(_LUT16_CACHE_MAX + 4)
+    ]
+    _lut16_of.cache_clear()
+    first = [tuple(a.copy() for a in _lut16(t)) for t in tables]
+    assert _lut16_of.cache_info().currsize <= _LUT16_CACHE_MAX
+    # table 0 was evicted, so this is a rebuild, equal to the original
+    misses = _lut16_of.cache_info().misses
+    val, ln = _lut16(tables[0])
+    assert _lut16_of.cache_info().misses == misses + 1
+    assert np.array_equal(val, first[0][0]) and np.array_equal(ln, first[0][1])
+    assert _lut16_of.cache_info().currsize <= _LUT16_CACHE_MAX

@@ -1,6 +1,8 @@
 """Spark jobs and parquet files read by the one-scan parity queries — exact
 counters, so they can be pinned where wall time cannot.
 
+Q1 filters the table plan memoized by `load_table`, so it runs no
+schema-inference job of its own.
 Q2 and Q4 sort their ≤24 hourly rows in one partition, so neither pays
 the sampling job and shuffle map stage of a global orderBy. Q3 and Q4
 read `events` once, where their `_sql` twins' union and join read it
@@ -29,6 +31,13 @@ def _run(spark, sf_dir: str, op: str, group: str):
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     files = plan_metrics(df)["files_read"]  # the benchmark's files_read
     return len(sc.statusTracker().getJobIdsForGroup(group)), files
+
+
+def test_q1_time_filter_jobs_and_scans(spark, sf_smoke):
+    jobs, files = _run(spark, sf_smoke, "q1_time_filter", "test-parity-q1")
+    # the filtered scan's result job only
+    assert jobs == 1
+    assert files == 1
 
 
 def test_q2_hourly_avg_job_count(spark, sf_smoke):
