@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from orionld_to_hive_spark.schemas import READINGS_SCHEMA
 from orionld_to_hive_spark.sources.warehouse import TABLE_NAMES, load_table
 
 
@@ -43,18 +44,15 @@ def create_readings_table(
     """D2: typed external table over a readings parquet warehouse —
     the Spark twin of the reference's CREATE EXTERNAL TABLE
     (`hive.py:31-44`), with partition discovery instead of a
-    column-mapping string."""
+    column-mapping string. The columns are `schemas.READINGS_SCHEMA`;
+    Spark lists the partition column `room` last."""
+    columns = ", ".join(
+        f"{f.name} {f.dataType.simpleString()}" for f in READINGS_SCHEMA
+    )
     spark.sql(f"DROP TABLE IF EXISTS {name}")
     spark.sql(
         f"""
-        CREATE TABLE {name} (
-            entityid STRING,
-            temperature DOUBLE,
-            humidity INT,
-            brightness DOUBLE,
-            ts TIMESTAMP,
-            room STRING
-        )
+        CREATE TABLE {name} ({columns})
         USING parquet
         PARTITIONED BY (room)
         LOCATION '{location}'

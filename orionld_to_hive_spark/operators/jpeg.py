@@ -354,6 +354,20 @@ def _decode_jpeg_impl(payload: bytes) -> JpegImage:
                         f"(component {cid}: {ch}x{cv} vs max "
                         f"{hmax}x{vmax})"
                     )
+            # A complete stream codes every block of every component in
+            # at least one real bit (no Huffman code is all padding
+            # 1-bits), so a frame declaring more blocks than the payload
+            # has bits is truncated or forged. Refuse it before any
+            # buffer is sized by the declared dimensions.
+            declared = sum(
+                -(-w * ch // (8 * hmax)) * -(-h * cv // (8 * vmax))
+                for _cid, ch, cv, _tq in comps
+            )
+            if declared > 8 * len(payload):
+                raise ValueError(
+                    f"frame declares {declared} blocks, more than the "
+                    f"{len(payload)}-byte payload can code"
+                )
             frame = (h, w, comps)
             if progressive:
                 # allocate the coefficient accumulators, padded to the

@@ -40,10 +40,6 @@ AS_OF = "2024-01-31 00:00:00"
 EVENT_TAGS = ("click", "view", "purchase", "error", "signup")
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 def _by_hour(df: DataFrame) -> DataFrame:
     # hour_bucket ∈ [0, 24): one partition is bounded at any scale, so a
     # local sort replaces orderBy's sampling job and range exchange. The
@@ -90,7 +86,7 @@ WHERE ts >= TIMESTAMP '{AS_OF}' - INTERVAL 1 HOUR
 # groupBy(hour) is a partial-aggregated shuffle on ≤24 keys — map-side
 # combine reduces 100 TB of rows to 24·#tasks partials before the shuffle.
 def q2_hourly_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = _t(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     return _by_hour(
         events.groupBy(F.hour("ts").alias("hour_bucket")).agg(
             davg("value", "avg_value"), F.count(F.lit(1)).alias("n")
@@ -117,7 +113,7 @@ ORDER BY 1
 # grouping() flags disambiguate rolled-up NULLs from data NULLs (SURVEY.md
 # §7 hard-part #2).
 def q3_union_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = _t(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     tagged = events.filter(F.col("event_type").isin(*EVENT_TAGS)).select(
         F.col("event_type").alias("tag"),
         F.hour("ts").alias("hr"),
@@ -182,7 +178,7 @@ GROUP BY CUBE (tag, hr)
 # count filter). An hour whose values are all NULL stays, with a NULL
 # average.
 def q4_join_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = _t(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     tag = F.col("event_type")
     hourly = (
         events.filter(tag.isin("click", "view") & F.col("ts").isNotNull())
@@ -224,7 +220,7 @@ ORDER BY 1
 # U1 — plain N-way UNION ALL with literal tags (reference `hive.py:69-81`),
 # kept separate from Q3 for operator-level parity testing.
 def u1_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = _t(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     branches = [
         events.filter(F.col("event_type") == tag).select(
             "event_id", F.lit(tag).alias("tag"), "value"
@@ -244,7 +240,7 @@ SELECT event_id, 'view' AS tag, value FROM events WHERE event_type = 'view'
 # --------------------------------------------------------------------------
 # P5 — null-drop (reference `insert.py:77` df.dropna(how='any')).
 def p5_dropna(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = _t(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     return events.na.drop("any").select("event_id", "user_id", "value")
 
 
@@ -262,7 +258,7 @@ WHERE event_id IS NOT NULL AND ts IS NOT NULL AND user_id IS NOT NULL
 # no value-level oracle — the driver records a rows-only check. The sample
 # is still deterministic within Spark for a fixed seed and partitioning.
 def p6_sample_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = _t(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     return events.sample(fraction=0.5, seed=42).select("event_id", "value")
 
 
@@ -279,7 +275,7 @@ _P6_THRESHOLD = int(_P6_FRACTION * 4294967296)
 
 
 def p6_sample_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = _t(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     u32 = F.conv(
         F.substring(
             F.md5(F.concat(F.col("event_id").cast("string"), F.lit(":p6"))), 1, 8
@@ -303,7 +299,7 @@ WHERE CAST(CAST('0x' || substr(md5(CAST(event_id AS VARCHAR) || ':p6'), 1, 8)
 # top-k is the idiomatic scale-safe variant: per-partition local top-k,
 # then a k-row merge on the driver — no global sort of 100 TB).
 def topk_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = _t(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     return (
         events.select("event_id", "user_id", "value")
         .orderBy(F.col("value").desc(), F.col("event_id").asc())
@@ -323,7 +319,7 @@ LIMIT 10
 # F1-F15 scalar-function suite (reference §2.8) in one projection.
 # All JVM-side built-ins — stays inside whole-stage codegen.
 def scalar_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = _t(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     return events.filter(F.col("event_id") < 500).select(
         "event_id",
         # F1 unix_timestamp(ts): timestamp → whole epoch seconds
@@ -380,7 +376,7 @@ P8_DELAY_US = 3_600_000_000  # 3600 s in µs
 def p8_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
     from orionld_to_hive_spark.streaming.debounce import debounce_batch
 
-    events = _t(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     return debounce_batch(
         events.select("event_id", "user_id", "ts", "value"),
         key_col="user_id",
@@ -417,7 +413,7 @@ FROM scan WHERE kept
 # F11 — JSON field extraction (reference pulls values out of NGSI-LD
 # JSON payloads, `subscriber.py:55-60`). get_json_object is JVM-side.
 def f11_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = _t(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     k = F.get_json_object("props", "$.k").cast("int")
     return (
         events.select("event_id", k.alias("k_val"))
@@ -437,35 +433,15 @@ GROUP BY 1
 
 
 # --------------------------------------------------------------------------
-# SQL-surface twin of Q2: the same query expressed as SQL text over a
-# catalog view (capability parity with the reference's HiveQL interface,
-# `hive.py:55-60`). Its ORDER BY keeps the reference's global sort, where
-# q2_hourly_avg sorts its ≤24 rows in one partition.
-def q2_hourly_avg_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from orionld_to_hive_spark.catalog import register_warehouse
-
-    register_warehouse(spark, sf_dir, "events")
-    return spark.sql(
-        """
-        SELECT hour(ts) AS hour_bucket,
-               CAST(SUM(CAST(value AS DECIMAL(27,6))) AS DOUBLE) / COUNT(value)
-                 AS avg_value,
-               COUNT(*) AS n
-        FROM events
-        GROUP BY hour(ts)
-        ORDER BY hour_bucket
-        """
-    )
-
-
-# --------------------------------------------------------------------------
-# spark.sql twins of Q1/Q3/Q4 (Q2's lives above): SURVEY §7 requires
+# spark.sql twins of Q1–Q4: SURVEY §7 requires
 # every flagship query on BOTH the DataFrame API and the SQL-string
 # surface (the reference's whole interface is HiveQL text). The SQL
 # strings are ANSI enough that the very same text is the DuckDB oracle.
 # The twins keep the reference's HiveQL shape: Q3's five-branch UNION ALL
 # and Q4's join of two aggregates, where q3_union_cube and q4_join_hourly
 # read `events` once on purpose — the twins prove those rewrites equal.
+# Q2's twin keeps the reference's global ORDER BY, where q2_hourly_avg
+# sorts its ≤24 rows in one partition.
 def _sql_on_events(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
     from orionld_to_hive_spark.catalog import register_warehouse
 
@@ -475,6 +451,10 @@ def _sql_on_events(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
 
 def q1_time_filter_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _sql_on_events(spark, sf_dir, Q1_SQL)
+
+
+def q2_hourly_avg_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _sql_on_events(spark, sf_dir, Q2_SQL)
 
 
 def q3_union_cube_sql(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -21,6 +21,7 @@ type with values identical to what DuckDB's reader produces:
 from __future__ import annotations
 
 import os
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -57,10 +58,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     session's lifetime (static testdata / generated ladder replicas),
     so the cached plan can never go stale; writers that produce
     mutable tables (merge, snapshots, incremental) use
-    `spark.read.parquet` directly and are unaffected. Keying the cache
+    `spark.read.parquet` directly and are unaffected. Keying the memo
     on the session instance (not a module global) ties its lifetime to
     the session, so recreated test sessions never see foreign plans.
-    No cached plan depends on the session timezone."""
+    The same memo holds each table's file facts (`scan_splits`,
+    `table_rows`, `table_bytes`). No cached plan depends on the session
+    timezone."""
     return _table(spark, sf_dir, name)[0]
 
 
@@ -73,33 +76,17 @@ def scan_splits(spark: SparkSession, sf_dir: str, name: str) -> int:
     driver testdata's layout at every sf) scans as ONE task no matter
     what `spark.sql.files.maxPartitionBytes` says. Effective
     parallelism is therefore the TOTAL ROW-GROUP COUNT across the
-    table's files, capped by the size-based split count. Footers are
-    read once per (sf_dir, table) and memoized on the session (same
-    lifetime contract as load_table's plan cache)."""
-    cache = getattr(spark, "_graft_split_cache", None)
-    if cache is None:
-        cache = {}
-        spark._graft_split_cache = cache
-    key = (os.path.abspath(sf_dir), name)
-    if key in cache:
-        return cache[key]
-    import pyarrow.parquet as pq
-
-    files = _parquet_files(os.path.join(sf_dir, f"{name}.parquet"))
-    groups = 0
-    total = 0
-    for f in files:
-        groups += max(1, pq.ParquetFile(f).metadata.num_row_groups)
-        total += os.path.getsize(f)
+    table's files, capped by the size-based split count. Read from the
+    table's memoized file facts."""
+    facts = _file_facts(spark, sf_dir, name)
     # Spark packs small files into byte-range splits (maxPartitionBytes,
     # openCostInBytes per file) — a thousand row groups in one 100 MB
     # file still scan as one task. Effective parallelism is the
     # smaller of the two limits.
     max_split = 128 << 20
     open_cost = 4 << 20
-    size_splits = max(1, (total + open_cost * len(files)) // max_split)
-    cache[key] = min(groups, int(size_splits))
-    return cache[key]
+    size_splits = max(1, (facts.bytes + open_cost * facts.files) // max_split)
+    return min(facts.row_groups, size_splits)
 
 
 def table_rows(spark: SparkSession, sf_dir: str, name: str) -> int:
@@ -108,19 +95,8 @@ def table_rows(spark: SparkSession, sf_dir: str, name: str) -> int:
     full scan job. Used where a query needs |table| as a scalar (e.g.
     SemDeDup's k = n // target): one fewer driver-synchronous job,
     same number, and DuckDB's reader derives the same value from the
-    same footers. Cached alongside the split counts."""
-    cache = getattr(spark, "_graft_rows_cache", None)
-    if cache is None:
-        cache = {}
-        spark._graft_rows_cache = cache
-    key = (os.path.abspath(sf_dir), name)
-    if key in cache:
-        return cache[key]
-    import pyarrow.parquet as pq
-
-    files = _parquet_files(os.path.join(sf_dir, f"{name}.parquet"))
-    cache[key] = sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-    return cache[key]
+    same footers. Read from the table's memoized file facts."""
+    return _file_facts(spark, sf_dir, name).rows
 
 
 def table_bytes(spark: SparkSession, sf_dir: str, name: str) -> int:
@@ -129,16 +105,44 @@ def table_bytes(spark: SparkSession, sf_dir: str, name: str) -> int:
     job — used as the scale gate for size-bounded in-query caches
     (e.g. the exact-substr gram stream: cache when the corpus is
     provably small, recompute when it is not)."""
-    cache = getattr(spark, "_graft_bytes_cache", None)
-    if cache is None:
-        cache = {}
-        spark._graft_bytes_cache = cache
-    key = (os.path.abspath(sf_dir), name)
-    if key in cache:
-        return cache[key]
+    return _file_facts(spark, sf_dir, name).bytes
+
+
+class _FileFacts(NamedTuple):
+    files: int
+    row_groups: int  # a file without row groups still costs one task
+    rows: int
+    bytes: int
+
+
+def _memo(spark: SparkSession, kind: str, sf_dir: str, name: str, build):
+    """`build(spark, sf_dir, name)`, memoized on the session per
+    (kind, absolute dir, table) — the lifetime contract of `load_table`."""
+    memo = getattr(spark, "_graft_warehouse_memo", None)
+    if memo is None:
+        memo = spark._graft_warehouse_memo = {}
+    key = (kind, os.path.abspath(sf_dir), name)
+    if key not in memo:
+        memo[key] = build(spark, sf_dir, name)
+    return memo[key]
+
+
+def _file_facts(spark: SparkSession, sf_dir: str, name: str) -> _FileFacts:
+    return _memo(spark, "files", sf_dir, name, _read_file_facts)
+
+
+def _read_file_facts(spark, sf_dir, name) -> _FileFacts:
+    # one listing and one footer read per file
+    import pyarrow.parquet as pq
+
     files = _parquet_files(os.path.join(sf_dir, f"{name}.parquet"))
-    cache[key] = sum(os.path.getsize(f) for f in files)
-    return cache[key]
+    metas = [pq.ParquetFile(f).metadata for f in files]
+    return _FileFacts(
+        files=len(files),
+        row_groups=sum(max(1, m.num_row_groups) for m in metas),
+        rows=sum(m.num_rows for m in metas),
+        bytes=sum(os.path.getsize(f) for f in files),
+    )
 
 
 def _parquet_files(path: str) -> list[str]:
@@ -170,25 +174,24 @@ def _parquet_files(path: str) -> list[str]:
 def load_spread(
     spark: SparkSession, sf_dir: str, name: str, *cols: str
 ) -> DataFrame:
-    """A fact-table scan with LAYOUT-ADAPTIVE parallelism (r13, guide
-    §2.5 input skew): when the table's file layout cannot feed at
-    least defaultParallelism scan tasks (the local corpus is one
-    parquet file with one row group — every scan stage in the engine
-    otherwise runs on a single core), round-robin-spread the projected
-    scan output across the session's cores. On a layout with real
-    splits (many files / row groups — any production table) the
-    condition is false and NO exchange is injected, so this is not a
-    local[32] constant: it is derived from the input, which is what
-    makes it honest at 100 TB. Projection happens before the exchange
-    (guide §2.3 — only the used columns cross).
+    """A fact-table scan with LAYOUT-ADAPTIVE parallelism (input
+    skew): when the table's file layout cannot feed at least
+    defaultParallelism scan tasks (the local corpus is one parquet file
+    with one row group — every scan stage in the engine otherwise runs
+    on a single core), round-robin-spread the projected scan output
+    across the session's cores. On a layout with real splits (many
+    files / row groups — any production table) the condition is false
+    and NO exchange is injected, so this is not a local[32] constant:
+    it is derived from the input, which is what makes it honest at
+    100 TB. Projection happens before the exchange, so only the used
+    columns cross.
 
-    r14 (VERDICT r13 item 7): the fan-out is size-capped at one task
-    per _SPREAD_MIN_ROWS_PER_TASK rows — a tiny frame (the XPath
-    chain's sub-hundred-row inputs at small SFs) no longer schedules
+    The fan-out is size-capped at one task per
+    _SPREAD_MIN_ROWS_PER_TASK rows, so a tiny frame (the XPath chain's
+    sub-hundred-row inputs at small SFs) does not schedule
     defaultParallelism near-empty tasks. The cap binds only below
     par·_SPREAD_MIN_ROWS_PER_TASK rows (256 rows at local[32]), far
-    under any frame whose per-row work made the spread pay, so every
-    r13 keep-decision is unchanged."""
+    under any frame whose per-row work made the spread pay."""
     df = load_table(spark, sf_dir, name)
     if cols:
         df = df.select(*cols)
@@ -219,27 +222,23 @@ def load_docs_spread(spark: SparkSession, sf_dir: str, *cols: str) -> DataFrame:
 
     Why: the local corpus arrives as ONE parquet split, which pins a
     whole Python stage to a single worker (the jpeg codec measured
-    22 s → 2.8 s at sf0.1 from this exchange alone; the r12 audit
-    found every non-codec walker query paying the same single-task
-    tax). On a real cluster the input already has file-split
-    parallelism and the tiny round-robin exchange (the projected
-    doc_id+text columns) is noise next to the per-row Python work —
-    while HERE it buys the full defaultParallelism fan-out.
+    22 s → 2.8 s at sf0.1 from this exchange alone, and every
+    non-codec walker query paid the same single-task tax). On a real
+    cluster the input already has file-split parallelism and the tiny
+    round-robin exchange (the projected doc_id+text columns) is noise
+    next to the per-row Python work — while HERE it buys the full
+    defaultParallelism fan-out. Through `load_spread`, the exchange is
+    injected only when the file layout actually starves the cores
+    (always true for the local corpus, never for a production
+    many-file table).
 
-    r13 optimization note (guide §2.4): walker queries downstream of
-    this spread used to end in `.orderBy("asset_id")` — a
-    presentation-only total sort. Its RangePartitioning exchange
-    samples partition bounds with a SEPARATE job that re-executes the
-    narrow mapInPandas stage above the round-robin shuffle, i.e. the
-    whole Python walk ran TWICE per action, plus the sort shuffle
-    itself. The driver's value hash and the in-repo oracle diff are
-    order-insensitive, so the sorts were dropped fleet-wide; at
-    100 TB a total sort of walker output is exactly the accidental
-    Exchange the guide says to remove.
-
-    r13: routed through `load_spread`, so the exchange is injected
-    only when the file layout actually starves the cores (always true
-    for the local corpus, never for a production many-file table)."""
+    Walker output downstream of this spread is not globally sorted: a
+    RangePartitioning exchange samples partition bounds with a
+    SEPARATE job that re-executes the narrow mapInPandas stage above
+    the round-robin shuffle, so the whole Python walk would run TWICE
+    per action, plus the sort shuffle itself. The result hash of the
+    `__spark_entry__` contract and the in-repo oracle diff are
+    order-insensitive."""
     return load_spread(spark, sf_dir, "documents", *(cols or ("doc_id", "text")))
 
 
@@ -249,14 +248,7 @@ def _table(
     """(table, raw scan, nanos columns), memoized on the session. The
     raw scan still holds the nanos columns as int64 nanos; without any,
     it is the table itself."""
-    cache = getattr(spark, "_graft_table_cache", None)
-    if cache is None:
-        cache = {}
-        spark._graft_table_cache = cache
-    key = (os.path.abspath(sf_dir), name)
-    if key not in cache:
-        cache[key] = _read_table(spark, sf_dir, name)
-    return cache[key]
+    return _memo(spark, "plan", sf_dir, name, _read_table)
 
 
 def _read_table(spark, sf_dir, name):
@@ -340,47 +332,6 @@ def load_time_range(
     return df
 
 
-def compact_table(
-    spark: SparkSession,
-    path: str,
-    sort_col: str | None = None,
-    target_file_bytes: int = 128 << 20,
-) -> int:
-    """Small-files compaction: rewrite a parquet table into
-    ceil(total_bytes / target) files, preserving (or establishing)
-    clustering on `sort_col`. Returns the new file count.
-
-    Streaming ingest (S4) appends one file per micro-batch — after a
-    day a 100 TB warehouse holds millions of KB-sized files and scan
-    planning, not IO, dominates query time. Compaction = one job:
-    repartitionByRange on the sort key (range partitioning keeps each
-    output file a contiguous key range ⇒ parquet min/max row-group
-    skipping stays effective) + sortWithinPartitions, written to a
-    temp location then swapped in. On an object store the swap is a
-    metastore location flip rather than a rename; the rewrite job is
-    identical.
-    """
-    import math
-    import shutil
-
-    df = spark.read.parquet(path)
-    total = sum(
-        os.path.getsize(f[len("file:"):] if f.startswith("file:") else f)
-        for f in df.inputFiles()
-    )
-    n_files = max(1, math.ceil(total / target_file_bytes))
-    out = (
-        df.repartitionByRange(n_files, sort_col).sortWithinPartitions(sort_col)
-        if sort_col
-        else df.repartition(n_files)
-    )
-    tmp = path.rstrip("/") + ".compact-tmp"
-    out.write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(path)
-    os.rename(tmp, path)
-    return n_files
-
-
 def write_partitioned(
     df: DataFrame,
     path: str,
@@ -425,14 +376,11 @@ def overwrite_partitions(
     partition-overwrite mode — static mode would truncate the whole
     table). This is how a 100 TB warehouse re-processes one bad
     day/room without rewriting history; re-running the same backfill
-    is a no-op semantically (same input → same partition contents)."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        out = df
-        if sort_cols:
-            out = out.sortWithinPartitions(*sort_cols)
-        out.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    is a no-op semantically (same input → same partition contents).
+    The mode is a per-write option, so the session conf is untouched
+    and a concurrent static overwrite keeps its static semantics."""
+    out = df
+    if sort_cols:
+        out = out.sortWithinPartitions(*sort_cols)
+    writer = out.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+    writer.partitionBy(*partition_cols).parquet(path)

@@ -26,10 +26,11 @@ for the same reason.
 
 Retention: tombstones accumulate one row per deleted key (not per
 delete event — merge keeps only the newest row per key). Purging them
-is a maintenance rewrite (`sources/compaction.py` territory) and is
+is a maintenance rewrite, `sources/merge.purge_tombstones`, and is
 only safe for tombstones older than the transport's maximum delivery
-lag — purge early and the resurrection window above reopens. Not
-automated here by design; the safe default is to keep them.
+lag — purge early and the resurrection window above reopens. The
+applier never purges on its own, and the purge needs an explicit bound
+(`up_to_version`, or the `purge_all=True` opt-out).
 
 Idempotency under checkpoint replay needs no batch_id bookkeeping —
 re-merging rows the table already reflects rewrites the touched

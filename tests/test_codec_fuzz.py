@@ -12,6 +12,7 @@ import io
 import wave
 
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -86,6 +87,25 @@ def test_decoders_mutated_valid_payloads_never_crash(kind, pos, junk):
             fn(bytes(b))
         except OK:
             pass
+
+
+@pytest.mark.parametrize(
+    "kind, pos, junk",
+    [
+        # the property test's draw: SOF dims of the CMYK base become
+        # 11 264 x 46 880, 33 003 520 blocks in a 365-byte stream
+        ("jpeg_cmyk", 92, b",\x00\xb7"),
+        # a progressive SOF2 at 65 535 x 65 535
+        ("jpeg_prog", 76, b"\xff\xff\xff\xff"),
+    ],
+)
+def test_jpeg_frame_larger_than_payload_is_refused(kind, pos, junk):
+    # the decoder sized its coefficient buffers from the declared
+    # dimensions and raised MemoryError (15.7 GiB / 16 GiB requests)
+    b = bytearray(_BASES[kind])
+    b[pos : pos + len(junk)] = junk
+    with pytest.raises(ValueError, match="more than the .*-byte payload"):
+        decode_jpeg(bytes(b))
 
 
 def test_boundary_preserves_specific_errors():

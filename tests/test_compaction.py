@@ -1,52 +1,7 @@
-"""Small-files compaction: many tiny append files → few clustered files,
-same rows, clustering preserved for row-group skipping."""
+"""Dynamic partition-overwrite backfill: only the partitions present in
+the written frame are replaced."""
 
 from __future__ import annotations
-
-import glob
-
-from orionld_to_hive_spark.sources.warehouse import compact_table, load_table
-
-
-def test_compact_table_merges_files_and_keeps_rows(spark, tmp_path):
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
-    path = str(tmp_path / "events_small")
-    # simulate per-micro-batch appends: 16 separate tiny files
-    ev.repartition(16).write.parquet(path)
-    assert len(glob.glob(path + "/*.parquet")) == 16
-    before = sorted(r.event_id for r in spark.read.parquet(path).collect())
-
-    n_files = compact_table(spark, path, sort_col="ts")
-    files = glob.glob(path + "/*.parquet")
-    assert len(files) == n_files == 1  # tiny table → one 128 MB-target file
-    after_df = spark.read.parquet(path)
-    assert sorted(r.event_id for r in after_df.collect()) == before
-
-    # clustering: each file holds a contiguous ts range (here: the one
-    # file is fully sorted), so min/max row-group stats stay selective
-    ts = [r.ts for r in after_df.collect()]
-    assert ts == sorted(ts)
-
-
-def test_compact_table_splits_by_target_size(spark, tmp_path):
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
-    path = str(tmp_path / "events_split")
-    ev.repartition(8).write.parquet(path)
-    # force a tiny target so the rewrite must produce multiple
-    # range-partitioned files
-    n_files = compact_table(spark, path, sort_col="ts", target_file_bytes=8 << 10)
-    files = glob.glob(path + "/*.parquet")
-    assert n_files > 1 and len(files) == n_files
-    # files are non-overlapping ts ranges
-    ranges = []
-    for f in sorted(files):
-        rows = spark.read.parquet(f).agg({"ts": "min"}).collect()
-        lo = rows[0][0]
-        hi = spark.read.parquet(f).agg({"ts": "max"}).collect()[0][0]
-        ranges.append((lo, hi))
-    ranges.sort()
-    for (_, hi_prev), (lo_next, _) in zip(ranges, ranges[1:]):
-        assert hi_prev <= lo_next
 
 
 def test_dynamic_partition_overwrite_backfills_only_named_partitions(
