@@ -14,13 +14,10 @@ Design:
       constant plane set, so stream and batch buckets can never drift)
       → append to a parquet index, one subdirectory per micro-batch.
 
-Exactly-once without a transactional sink: each foreachBatch call
-OVERWRITES its own `batch_id=N` subdirectory rather than appending to
-a shared one — a retried batch (checkpoint replay after a crash)
-rewrites the same rows instead of duplicating them, the same
-idempotency move a production job gets from partitioned dynamic
-overwrite. The accumulated index reads back with plain
-`spark.read.parquet(base)` partition discovery.
+Replay safety is the per-batch slot of `streaming/sink.py`: a
+replayed batch rewrites its own `batch_id=N` slot. The accumulated
+index reads back with plain `spark.read.parquet(base)` partition
+discovery.
 
 The invariant the unit test pins: after any sequence of micro-batches
 (including replays), `bands()` is row-identical to band-keying the
@@ -31,12 +28,11 @@ re-delivered under a LATER batch_id supersedes its old version
 neighbors in top-k nor pin stale embeddings.
 
 Scale stance: per-batch work is one Arrow-batched pandas_udf
-projection plus an O(batch) append — the accumulated index is never
-rewritten or shuffled on ingest. Probing is a band-key equi-join
+projection plus an O(batch) slot write — the accumulated index is
+never rewritten or shuffled on ingest. Probing is a band-key equi-join
 (queries × matching buckets only, never all vectors); at 100 TB the
 index is a bucketed table and the probe prunes to the touched band
-partitions. Index compaction (many small batch files → few large
-ones) is the existing sources/compaction.py job, unchanged.
+partitions.
 """
 
 from __future__ import annotations
@@ -46,6 +42,7 @@ from pyspark.sql import functions as F
 
 from orionld_to_hive_spark.functions.vectors import cosine
 from orionld_to_hive_spark.operators.similarity import _neardup_band_udf
+from orionld_to_hive_spark.streaming.sink import start_batches, write_slot
 
 
 def band_keys(df: DataFrame) -> DataFrame:
@@ -70,17 +67,11 @@ class StreamingLshIndex:
 
     # -- ingest ----------------------------------------------------------
     def write_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        """foreachBatch hook. Idempotent per batch_id (overwrite of the
-        batch's own subdirectory), so checkpoint replays cannot
-        double-insert."""
+        """foreachBatch hook: the batch's band and vector slots."""
         batch_df = batch_df.select("vec_id", "vec").persist()
         try:
-            band_keys(batch_df).write.mode("overwrite").parquet(
-                f"{self.base}/bands/batch_id={batch_id}"
-            )
-            batch_df.write.mode("overwrite").parquet(
-                f"{self.base}/vecs/batch_id={batch_id}"
-            )
+            write_slot(band_keys(batch_df), self.base, "bands", batch_id)
+            write_slot(batch_df, self.base, "vecs", batch_id)
         finally:
             batch_df.unpersist()
 
@@ -92,14 +83,7 @@ class StreamingLshIndex:
     ):
         """Attach the maintenance sink to a streaming frame of
         (vec_id, vec) rows."""
-        writer = (
-            stream_df.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(self.write_batch)
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        return start_batches(stream_df, self.write_batch, checkpoint_dir, available_now)
 
     # -- read back -------------------------------------------------------
     # A vec_id re-delivered under a DIFFERENT batch_id (offset reset
@@ -109,9 +93,8 @@ class StreamingLshIndex:
     # same neighbor then occupies several top-k ranks — and an updated
     # embedding is never superseded (r7 review). Latest-batch-wins per
     # vec_id on read fixes all three; band rows of superseded versions
-    # are dropped by joining on the winning (vec_id, batch_id). At
-    # 100 TB you'd fold this into the compaction job so steady-state
-    # reads skip the window.
+    # are dropped by joining on the winning (vec_id, batch_id). The
+    # window runs over every slot on every read (streaming/sink.py).
     def _winners(self, spark: SparkSession) -> DataFrame:
         from pyspark.sql.window import Window
 

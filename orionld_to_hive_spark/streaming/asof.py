@@ -9,9 +9,8 @@ temporal state).
 Shape: a LEFT stream of events (e.g. purchases) is enriched with the
 latest-preceding RIGHT row per key (e.g. the user's last click at or
 before the purchase). The right side is a parquet STATE TABLE under
-`base/right/` that can itself be fed by a second stream (batch_id
-subdirectories, same idempotent-overwrite move as `streaming/ann.py`),
-so both sides may be live.
+`base/right/` that can itself be fed by a second stream (per-batch
+slots, `streaming/sink.py`), so both sides may be live.
 
 Why foreachBatch and not stream-stream join state: the as-of result is
 ROW-LOCAL ON THE LEFT — `asof_join(L1 ∪ L2, R) = asof_join(L1, R) ∪
@@ -42,8 +41,8 @@ Scale stance: per micro-batch the work is one union-tag window over
 (batch ∪ right-state-restricted-to-batch-keys) — the right side is
 SEMI-JOIN-PRUNED to the batch's keys before the window, so a small
 batch against a 100 TB state table shuffles only the touched keys'
-history, not the table. Enriched output appends as one directory per
-batch_id; compaction is the existing sources/compaction.py job.
+history, not the table. Enriched output lands in one slot per
+batch_id (`streaming/sink.py`).
 """
 
 from __future__ import annotations
@@ -53,13 +52,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from orionld_to_hive_spark.operators.temporal import asof_join
-
-
-def _hadoop_exists(spark: SparkSession, path: str) -> bool:
-    p = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(
-        spark.sparkContext._jsc.hadoopConfiguration()
-    ).exists(p)
+from orionld_to_hive_spark.streaming.sink import (
+    exists,
+    read_state,
+    start_batches,
+    write_slot,
+)
 
 
 class StreamingAsofEnricher:
@@ -100,10 +98,10 @@ class StreamingAsofEnricher:
 
     # -- right-side state maintenance -------------------------------------
     def write_right_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        """foreachBatch hook for the right stream. Idempotent per
-        batch_id (overwrite of the batch's own subdirectory). With
-        `assert_unique_right`, duplicate (key, ts) rows within the
-        batch raise before anything is written (see __init__)."""
+        """foreachBatch hook for the right stream: the batch's right
+        slot. With `assert_unique_right`, duplicate (key, ts) rows
+        within the batch raise before anything is written (see
+        __init__)."""
         rows = batch_df.select(self.key, self.ts, *self.value_cols)
         if self.assert_unique_right:
             dup = (
@@ -121,22 +119,15 @@ class StreamingAsofEnricher:
                     "duplicates have no arrival order to break ties "
                     "with; pre-resolve them or drop assert_unique_right"
                 )
-        rows.write.mode("overwrite").parquet(
-            f"{self.base}/right/batch_id={batch_id}"
-        )
+        write_slot(rows, self.base, "right", batch_id)
 
     def start_right(
         self, stream_df: DataFrame, checkpoint_dir: str,
         available_now: bool = True,
     ):
-        writer = (
-            stream_df.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(self.write_right_batch)
+        return start_batches(
+            stream_df, self.write_right_batch, checkpoint_dir, available_now
         )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
 
     def right_state(self, spark: SparkSession) -> DataFrame:
         """Current right state: latest-batch-wins per (key, ts) so a
@@ -146,8 +137,7 @@ class StreamingAsofEnricher:
         falls back to max(value_cols) — deterministic but arbitrary;
         feeds where that matters should construct the enricher with
         `assert_unique_right=True` (r8 review). The window runs over
-        the state table's own key — at 100 TB this read folds into
-        compaction so steady-state probes skip it."""
+        the state table's own key, across every slot."""
         df = spark.read.parquet(f"{self.base}/right")
         w = Window.partitionBy(self.key, self.ts).orderBy(
             F.col("batch_id").desc(),
@@ -162,12 +152,12 @@ class StreamingAsofEnricher:
     # -- left-side enrichment ----------------------------------------------
     def enrich_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         """foreachBatch hook for the left stream: union-tag as-of join
-        of this batch against current right state, written idempotently
-        under the batch's own subdirectory. The right side is pruned to
-        the batch's keys first (left-semi), so the window shuffles only
-        the touched keys' history."""
+        of this batch against current right state, written to the
+        batch's enriched slot. The right side is pruned to the batch's
+        keys first (left-semi), so the window shuffles only the touched
+        keys' history."""
         spark = batch_df.sparkSession
-        if not _hadoop_exists(spark, f"{self.base}/right"):
+        if not exists(spark, f"{self.base}/right"):
             # the right table defines the asof value-column TYPES, so
             # an empty stand-in can't be synthesized — fail with the
             # contract instead of a cryptic path-missing AnalysisException
@@ -183,16 +173,15 @@ class StreamingAsofEnricher:
                 self.key,
                 "left_semi",
             )
-            asof_join(
+            enriched = asof_join(
                 batch_df,
                 right,
                 key=self.key,
                 ts=self.ts,
                 value_cols=self.value_cols,
                 how=self.how,
-            ).write.mode("overwrite").parquet(
-                f"{self.base}/enriched/batch_id={batch_id}"
             )
+            write_slot(enriched, self.base, "enriched", batch_id)
         finally:
             batch_df.unpersist()
 
@@ -200,26 +189,17 @@ class StreamingAsofEnricher:
         self, stream_df: DataFrame, checkpoint_dir: str,
         available_now: bool = True,
     ):
-        writer = (
-            stream_df.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(self.enrich_batch)
+        return start_batches(
+            stream_df, self.enrich_batch, checkpoint_dir, available_now
         )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
 
     def enriched(self, spark: SparkSession) -> DataFrame:
         """Accumulated enrichment (batch_id discovered as a partition
-        column and dropped — replays overwrite in place, so rows are
-        never duplicated across directories). Raises with the
-        bootstrap step if no left batch has been enriched yet (r8
-        review: an explicit contract error, not a path-missing
-        AnalysisException)."""
-        if not _hadoop_exists(spark, f"{self.base}/enriched"):
-            raise RuntimeError(
-                f"no enriched output under {self.base}/enriched yet — "
-                "run the left enrichment stream (start_left / "
-                "enrich_batch) before reading the accumulated view"
-            )
-        return spark.read.parquet(f"{self.base}/enriched").drop("batch_id")
+        column and dropped). Raises with the bootstrap step if no left
+        batch has been enriched yet (r8 review: an explicit contract
+        error, not a path-missing AnalysisException)."""
+        return read_state(
+            spark,
+            f"{self.base}/enriched",
+            "the left enrichment stream (start_left / enrich_batch)",
+        ).drop("batch_id")

@@ -35,8 +35,8 @@ applier never purges on its own, and the purge needs an explicit bound
 Idempotency under checkpoint replay needs no batch_id bookkeeping —
 re-merging rows the table already reflects rewrites the touched
 partitions to identical content (latest-wins is a fixed point). The
-streaming/ann.py per-batch-directory trick is inapplicable anyway:
-merge mutates shared table state rather than owning a batch slot.
+per-batch slot of `streaming/sink.py` is inapplicable anyway: merge
+mutates shared table state rather than owning a batch slot.
 
 Scale stance: per-trigger cost is merge's — O(touched partitions +
 batch), independent of table size; the stream itself holds NO state
@@ -56,6 +56,7 @@ from pyspark.sql import functions as F
 
 from orionld_to_hive_spark.sources.merge import latest_wins, merge_upsert
 from orionld_to_hive_spark.sources.warehouse import write_partitioned
+from orionld_to_hive_spark.streaming.sink import start_batches
 
 
 class StreamingCdcApplier:
@@ -137,11 +138,4 @@ class StreamingCdcApplier:
         checkpoint_dir: str,
         available_now: bool = True,
     ):
-        writer = (
-            stream_df.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(self.apply_batch)
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        return start_batches(stream_df, self.apply_batch, checkpoint_dir, available_now)

@@ -9,8 +9,8 @@ Design: the eval side of a contamination screen is always tiny (a
 benchmark is thousands of documents; the corpus is billions), so the
 eval shingle set is the natural STATE — written once at bootstrap,
 broadcast against every micro-batch. Each batch contributes the set of
-(eval_doc, gram) pairs it covers, landed under an idempotent
-`batch_id=N` directory. The read view unions the pairs (DISTINCT) —
+(eval_doc, gram) pairs it covers, landed in its own `batch_id=N` slot
+(`streaming/sink.py`). The read view unions the pairs (DISTINCT) —
 set union is idempotent and commutative, so the screen is
 at-least-once-safe BY ALGEBRA: checkpoint replays, redelivered
 batches, and even the same document arriving twice cannot inflate a
@@ -30,7 +30,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from orionld_to_hive_spark.operators.text import _shingles
-from orionld_to_hive_spark.streaming.asof import _hadoop_exists
+from orionld_to_hive_spark.streaming.sink import (
+    exists,
+    read_state,
+    start_batches,
+    write_slot,
+)
+
+_BOOTSTRAP = "bootstrap_eval(eval_docs)"
 
 
 class StreamingContaminationScreen:
@@ -69,14 +76,10 @@ class StreamingContaminationScreen:
     def screen_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         """foreachBatch hook for the training-document stream:
         intersect the batch's distinct grams with the (broadcast-sized)
-        eval gram set; write the covered pairs idempotently."""
-        spark = batch_df.sparkSession
-        if not _hadoop_exists(spark, f"{self.base}/eval_grams"):
-            raise RuntimeError(
-                f"no eval state under {self.base}/eval_grams yet — "
-                "bootstrap_eval(eval_docs) before screening batches"
-            )
-        eval_g = spark.read.parquet(f"{self.base}/eval_grams")
+        eval gram set; write the covered pairs to the batch's slot."""
+        eval_g = read_state(
+            batch_df.sparkSession, f"{self.base}/eval_grams", _BOOTSTRAP
+        )
         batch_g = (
             batch_df.select(_shingles().alias("grams"))
             .select(F.explode("grams").alias("g"))
@@ -84,37 +87,24 @@ class StreamingContaminationScreen:
         )
         # the eval side is tiny by construction — broadcast it, same
         # stance as the batch op's F.broadcast(eval_g)
-        batch_g.join(F.broadcast(eval_g), "g").select(
-            "doc_id", "g"
-        ).write.mode("overwrite").parquet(
-            f"{self.base}/hits/batch_id={batch_id}"
-        )
+        hits = batch_g.join(F.broadcast(eval_g), "g").select("doc_id", "g")
+        write_slot(hits, self.base, "hits", batch_id)
 
     def start(
         self, stream_df: DataFrame, checkpoint_dir: str,
         available_now: bool = True,
     ):
-        writer = (
-            stream_df.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(self.screen_batch)
+        return start_batches(
+            stream_df, self.screen_batch, checkpoint_dir, available_now
         )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
 
     # -- read view ------------------------------------------------------
     def report(self, spark: SparkSession) -> DataFrame:
         """Current contamination table, schema-identical to the batch
         `contamination_screen`: per eval doc, distinct grams, grams
         seen anywhere in the streamed corpus so far, and the rate."""
-        if not _hadoop_exists(spark, f"{self.base}/eval_totals"):
-            raise RuntimeError(
-                f"no eval state under {self.base}/eval_totals yet — "
-                "bootstrap_eval(eval_docs) before reading the report"
-            )
-        totals = spark.read.parquet(f"{self.base}/eval_totals")
-        if _hadoop_exists(spark, f"{self.base}/hits"):
+        totals = read_state(spark, f"{self.base}/eval_totals", _BOOTSTRAP)
+        if exists(spark, f"{self.base}/hits"):
             # re-anchor accumulated hit pairs on the CURRENT eval gram
             # state: after an eval-set re-bootstrap, pairs whose gram
             # was dropped must stop matching (the documented update

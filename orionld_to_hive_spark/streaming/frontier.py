@@ -13,11 +13,11 @@ SAME lineage functions (`discovered_allowed_urls` + `rank_schedule`
 Design:
   readStream(doc frame: doc_id) → foreachBatch:
     1. run the shared discovery+gate lineage over the NEW docs only
-       and overwrite `urls/batch_id=N` (idempotent per batch —
-       checkpoint replays rewrite, never duplicate; a doc
-       re-delivered later supersedes via latest-batch-wins on read);
+       and write the batch's `urls/batch_id=N` slot (replay-safe, see
+       `streaming/sink.py`; a doc re-delivered later supersedes via
+       latest-batch-wins on read);
     2. recompute the politeness ranking over the ACCUMULATED
-       latest-wins URL store and overwrite `schedule/batch_id=N`.
+       latest-wins URL store and write the `schedule/batch_id=N` slot.
 
 The ranking is deliberately a full recompute: per-host slots are a
 GLOBAL rank (adding one high-priority URL shifts every later slot on
@@ -43,6 +43,7 @@ from orionld_to_hive_spark.operators.frontier import (
     discovered_allowed_urls,
     rank_schedule,
 )
+from orionld_to_hive_spark.streaming.sink import start_batches, write_slot
 
 
 class StreamingFrontier:
@@ -57,16 +58,15 @@ class StreamingFrontier:
 
     # -- ingest ----------------------------------------------------------
     def write_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        """foreachBatch hook. Idempotent per batch_id (both writes
-        overwrite their own subdirectory)."""
-        spark = batch_df.sparkSession
+        """foreachBatch hook: the batch's url and schedule slots."""
         docs = batch_df.select("doc_id").distinct()
-        discovered_allowed_urls(docs).write.mode("overwrite").parquet(
-            f"{self.base}/urls/batch_id={batch_id}"
+        write_slot(discovered_allowed_urls(docs), self.base, "urls", batch_id)
+        write_slot(
+            rank_schedule(self._latest_urls(batch_df.sparkSession)),
+            self.base,
+            "schedule",
+            batch_id,
         )
-        rank_schedule(self._latest_urls(spark)).write.mode(
-            "overwrite"
-        ).parquet(f"{self.base}/schedule/batch_id={batch_id}")
 
     def start(
         self,
@@ -76,14 +76,7 @@ class StreamingFrontier:
     ):
         """Attach the frontier sink to a streaming frame of (doc_id)
         rows."""
-        writer = (
-            stream_df.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(self.write_batch)
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        return start_batches(stream_df, self.write_batch, checkpoint_dir, available_now)
 
     # -- read back -------------------------------------------------------
     def _latest_urls(self, spark: SparkSession) -> DataFrame:

@@ -8,13 +8,12 @@ own partial register table and the estimate of everything-seen-so-far
 is recoverable at any time by max-merging the partials and running the
 same estimator. Duplicates can never inflate the answer (max is
 idempotent), which also makes the store at-least-once-safe by algebra;
-the per-batch `batch_id=N` overwrite additionally keeps replays from
-growing the store.
+the per-batch slot (`streaming/sink.py`) additionally keeps replays
+from growing the store.
 
 State bound: |types|·|days|·m register rows per batch partial, however
 many raw events the batch held; the read-side max-merge touches only
-register rows. Compaction of many small batch partials into one is the
-existing `sources/compaction.py` job.
+register rows.
 
 The unit test pins: store rollup after N micro-batches ≡ the batch
 `hll_portable_rollup` over the same rows, and a replayed batch changes
@@ -30,6 +29,7 @@ from orionld_to_hive_spark.operators.sketches import (
     _hll_registers_of,
     _hll_rollup_from_daily,
 )
+from orionld_to_hive_spark.streaming.sink import start_batches, write_slot
 
 
 class StreamingHllStore:
@@ -39,11 +39,9 @@ class StreamingHllStore:
         self.base = base.rstrip("/")
 
     def write_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        """foreachBatch hook — idempotent per batch_id (overwrite),
-        and max-merge makes even cross-batch duplicates harmless."""
-        _hll_registers_of(batch_df).write.mode("overwrite").parquet(
-            f"{self.base}/reg/batch_id={batch_id}"
-        )
+        """foreachBatch hook: the batch's register slot. Max-merge
+        makes even cross-batch duplicates harmless."""
+        write_slot(_hll_registers_of(batch_df), self.base, "reg", batch_id)
 
     def start(
         self,
@@ -51,14 +49,7 @@ class StreamingHllStore:
         checkpoint_dir: str,
         available_now: bool = True,
     ):
-        writer = (
-            stream_df.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(self.write_batch)
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        return start_batches(stream_df, self.write_batch, checkpoint_dir, available_now)
 
     def merged_registers(self, spark: SparkSession) -> DataFrame:
         """Max-merge the per-batch partials into the daily register

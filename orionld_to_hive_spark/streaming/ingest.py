@@ -19,8 +19,10 @@ per room per batch at this size. The reference's per-entity throttle
 (T2) is not on this path; `debounce.py` has the keyed operator.
 
 Checkpointing upgrades the reference's at-most-once delivery (HTTP 200
-regardless of write outcome, `subscriber.py:123`) to exactly-once into
-the warehouse.
+regardless of write outcome, `subscriber.py:123`) to at-least-once into
+the warehouse, not exactly-once: each batch APPENDS to the shared
+table, so a batch that Spark re-runs after a crash between the write
+and the commit log is written twice (`streaming/sink.py`).
 
 Timestamp semantics (T4): the reference DISCARDS the event's observedAt
 and stamps arrival time (`subscriber.py:62`). We keep both: `ts` is
@@ -35,6 +37,7 @@ from pyspark.sql import functions as F
 
 from orionld_to_hive_spark.schemas import NGSI_NOTIFICATION_SCHEMA, SENSORS
 from orionld_to_hive_spark.sources.warehouse import write_partitioned
+from orionld_to_hive_spark.streaming.sink import start_batches
 
 
 def parse_notifications(df: DataFrame) -> DataFrame:
@@ -81,20 +84,18 @@ def start_ingest(
 ):
     """Run the notification stream into the parquet warehouse.
 
-    foreachBatch + checkpoint = exactly-once appends, each through the
-    batch path's `write_partitioned`, so downstream queries prune and
-    skip identically on both.
+    foreachBatch + checkpoint = at-least-once appends (a batch re-run
+    after a crash before its commit is appended again), each through
+    the batch path's `write_partitioned`, so downstream queries prune
+    and skip identically on both.
     """
-    parsed = read_notification_stream(spark, in_dir)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         write_partitioned(batch_df, out_path, ("room",), ("ts",))
 
-    writer = (
-        parsed.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write_batch)
+    return start_batches(
+        read_notification_stream(spark, in_dir),
+        write_batch,
+        checkpoint_dir,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

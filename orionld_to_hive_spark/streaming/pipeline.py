@@ -12,7 +12,7 @@ composes the batch side. This module is that composition:
                                batches first-arrival wins; a
                                redelivered or re-crawled text never
                                survives twice)
-    → survivors sink          (idempotent batch_id directories)
+    → survivors sink          (per-batch slots, streaming/sink.py)
     → token accounting        (per-source mixture partials over the
                                SURVIVING rows only — the number a
                                training-data budget actually wants)
@@ -35,17 +35,17 @@ the exact-dedup pipeline (with the ExactSubstr stage on, source
 attribution is reconciled but cleaned-token counts still reflect the
 streamed admission — see the method's Scope note).
 
-Replay contract: a re-run of batch N reads only hashes with
+Replay contract: every stage writes per-batch slots
+(`streaming/sink.py`), and a re-run of batch N reads only hashes with
 batch_id < N, so checkpoint replays (and explicit re-runs) rewrite the
-batch's own directories instead of double-admitting or double-counting
-(the streaming/ann.py idempotence move, applied at every stage).
+batch's own slots instead of double-admitting or double-counting.
 
 Scale stance: per batch the only non-local work is one left-anti join
 of the batch's hashes against the accumulated hash table — an
 equi-join on the hash key, prunable by hash-prefix partitioning at
 100 TB; gate and tokenization are map-side. State is one 64-hex row
 per admitted document (the content-addressed dedup ledger), far
-smaller than the corpus, and compactable with sources/compaction.py.
+smaller than the corpus.
 """
 
 from __future__ import annotations
@@ -54,9 +54,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from orionld_to_hive_spark.operators.pipeline import _quality_gate
-from orionld_to_hive_spark.streaming.asof import _hadoop_exists
+from orionld_to_hive_spark.streaming.sink import (
+    exists,
+    read_state,
+    start_batches,
+    write_slot,
+)
 from orionld_to_hive_spark.streaming.substr import StreamingExactSubstr
 from orionld_to_hive_spark.streaming.tokens import StreamingTokenAccounting
+
+_RUN = "the pipeline (start / process_batch)"
 
 
 class StreamingCurationPipeline:
@@ -108,7 +115,7 @@ class StreamingCurationPipeline:
         # cross-batch state: only hashes admitted by EARLIER batches
         # block this one — a replay of batch N must not see its own
         # previous write (idempotence)
-        if _hadoop_exists(spark, f"{self.base}/hashes"):
+        if exists(spark, f"{self.base}/hashes"):
             seen = (
                 spark.read.parquet(f"{self.base}/hashes")
                 .filter(F.col("batch_id") < batch_id)
@@ -123,33 +130,32 @@ class StreamingCurationPipeline:
             # (doc_id, source) over every GATED observation of this
             # batch — a mergeable min-partial, so the reconciliation
             # view can re-derive the GLOBAL min-doc_id winner per
-            # content hash regardless of arrival order. Idempotent:
-            # replays overwrite their own batch directory; duplicate
+            # content hash regardless of arrival order. Duplicate
             # deliveries across batches are absorbed by min-merge.
             # State is one row per distinct hash per batch that sees
-            # it — bounded by distinct content, compactable.
-            gated.groupBy("text_hash").agg(
+            # it — bounded by distinct content.
+            winners = gated.groupBy("text_hash").agg(
                 F.min(F.struct("doc_id", "source")).alias("w")
             ).select(
                 "text_hash",
                 F.col("w.doc_id").alias("doc_id"),
                 F.col("w.source").alias("source"),
-            ).write.mode("overwrite").parquet(
-                f"{self.base}/winners/batch_id={batch_id}"
             )
-            fresh.select("doc_id", "source", "text").write.mode(
-                "overwrite"
-            ).parquet(f"{self.base}/survivors/batch_id={batch_id}")
-            fresh.select("text_hash").write.mode("overwrite").parquet(
-                f"{self.base}/hashes/batch_id={batch_id}"
+            write_slot(winners, self.base, "winners", batch_id)
+            write_slot(
+                fresh.select("doc_id", "source", "text"),
+                self.base,
+                "survivors",
+                batch_id,
             )
+            write_slot(fresh.select("text_hash"), self.base, "hashes", batch_id)
             acct_rows = fresh.select("doc_id", "source", "text")
             if self._substr is not None:
                 self._substr.process_batch(
                     fresh.select("doc_id", "text"), batch_id
                 )
-                # account the CLEANED texts (already materialized by
-                # the substr stage's idempotent batch write)
+                # account the CLEANED texts (already materialized in
+                # the substr stage's slot for this batch)
                 acct_rows = (
                     spark.read.parquet(
                         f"{self.base}/substr/out/batch_id={batch_id}"
@@ -168,26 +174,13 @@ class StreamingCurationPipeline:
         self, stream_df: DataFrame, checkpoint_dir: str,
         available_now: bool = True,
     ):
-        writer = (
-            stream_df.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(self.process_batch)
+        return start_batches(
+            stream_df, self.process_batch, checkpoint_dir, available_now
         )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
 
     def survivors(self, spark: SparkSession) -> DataFrame:
-        """Accumulated curated corpus (batch_id dropped — replays
-        overwrite in place)."""
-        if not _hadoop_exists(spark, f"{self.base}/survivors"):
-            raise RuntimeError(
-                f"no survivors under {self.base}/survivors yet — run "
-                "the pipeline (start / process_batch) first"
-            )
-        return spark.read.parquet(f"{self.base}/survivors").drop(
-            "batch_id"
-        )
+        """Accumulated curated corpus (batch_id dropped)."""
+        return read_state(spark, f"{self.base}/survivors", _RUN).drop("batch_id")
 
     def accounting(self, spark: SparkSession) -> DataFrame:
         """Per-source token accounting over the CURATED corpus, schema-
@@ -215,15 +208,10 @@ class StreamingCurationPipeline:
         OTHER documents' spans were cut. Exact any-order substr
         reconciliation would need gram-ledger reconciliation, not
         just hash-winner reconciliation."""
-        if not _hadoop_exists(spark, f"{self.base}/winners"):
-            raise RuntimeError(
-                f"no winners ledger under {self.base}/winners yet — "
-                "run the pipeline (start / process_batch) first"
-            )
         from orionld_to_hive_spark.streaming.tokens import batch_partials
 
         glob = (
-            spark.read.parquet(f"{self.base}/winners")
+            read_state(spark, f"{self.base}/winners", _RUN)
             .groupBy("text_hash")
             .agg(F.min(F.struct("doc_id", "source")).alias("w"))
             .select(

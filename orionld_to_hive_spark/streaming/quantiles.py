@@ -12,25 +12,26 @@ t-digest/GK sketches this is the exact answer, with state bounded by
 DISTINCT values per group (the same bound the batch op's shuffle has),
 not by rows seen.
 
-Exactly-once: one overwritten `batch_id=N` parquet subdirectory per
-micro-batch (the streaming/ann.py move) — checkpoint replays rewrite
-their own partial instead of double-counting.
+Replay safety: one `batch_id=N` slot per micro-batch
+(`streaming/sink.py`) — a checkpoint replay rewrites its own partial
+instead of double-counting.
 
 The unit test pins: quantiles from the stream-maintained store after N
 micro-batches ≡ quantile_portable_value over the same rows in one
 batch pass, and a replayed batch changes nothing.
 
 Scale stance: per-batch work is one map-side-combined aggregate of
-O(batch) rows; the store grows by at most |new distinct values| per
-batch and is compacted by the existing sources/compaction.py job. The
-quantile query itself aggregates the store (distinct-value sized),
-never the raw stream history.
+O(batch) rows; each slot holds the batch's distinct (group, value)
+pairs. The quantile query aggregates the slots, never the raw stream
+history.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from orionld_to_hive_spark.streaming.sink import start_batches, write_slot
 
 
 def partial_histogram(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
@@ -53,11 +54,12 @@ class StreamingQuantileStore:
         self.value_col = value_col
 
     def write_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        """foreachBatch hook — idempotent per batch_id."""
-        partial_histogram(
-            batch_df, self.group_col, self.value_col
-        ).write.mode("overwrite").parquet(
-            f"{self.base}/hist/batch_id={batch_id}"
+        """foreachBatch hook: the batch's histogram slot."""
+        write_slot(
+            partial_histogram(batch_df, self.group_col, self.value_col),
+            self.base,
+            "hist",
+            batch_id,
         )
 
     def start(
@@ -66,14 +68,7 @@ class StreamingQuantileStore:
         checkpoint_dir: str,
         available_now: bool = True,
     ):
-        writer = (
-            stream_df.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(self.write_batch)
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        return start_batches(stream_df, self.write_batch, checkpoint_dir, available_now)
 
     def merged_histogram(self, spark: SparkSession) -> DataFrame:
         """Sum the per-batch partials — counts are additive, so this IS

@@ -3,7 +3,7 @@
 The reference re-runs its hourly GROUP BY from scratch on every query
 (reference `hive.py:55-60`) — at 100 TB that is a full fact-table scan
 per dashboard refresh. The streaming-native design maintains the
-rollup incrementally: each micro-batch appends MERGEABLE PARTIAL
+rollup incrementally: each micro-batch writes MERGEABLE PARTIAL
 aggregates (count + exact-decimal sum per (hour, room)), and the
 read-time view merges partials with a second tiny aggregate. The same
 partial/final split Spark uses internally for every groupBy, made
@@ -14,9 +14,10 @@ Properties:
     O(batch), never O(history);
   - the rollup table grows by ≤ (#rooms × #hours-touched) rows per
     batch — read-time merge is over partials, not events;
-  - partials carry `batch_id`; a foreachBatch retry (at-least-once)
-    rewrites identical (batch_id, hour, room) rows, and the read view's
-    dropDuplicates on that key restores exactly-once semantics;
+  - each batch's partials land in its own slot,
+    `{rollup_path}/partials/batch_id=N` (`streaming/sink.py`), so a
+    foreachBatch retry rewrites that slot instead of adding a second
+    copy, and the read view merges every slot as it is;
   - AVG is derivable because we store (sum, count), not averages —
     averages don't merge (SURVEY §2.4's A8 caveat applies at any scale).
 """
@@ -27,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from orionld_to_hive_spark.functions.numeric import DECIMAL_T
+from orionld_to_hive_spark.streaming.sink import start_batches, write_slot
 
 
 def _partials(batch_df: DataFrame) -> DataFrame:
@@ -45,26 +47,17 @@ def start_rollup(
     """Maintain the rollup from the notification stream, availableNow."""
 
     def update(batch_df: DataFrame, batch_id: int) -> None:
-        _partials(batch_df).withColumn(
-            "batch_id", F.lit(batch_id)
-        ).write.mode("append").parquet(rollup_path)
+        write_slot(_partials(batch_df), rollup_path, "partials", batch_id)
 
-    return (
-        parsed_stream.writeStream.foreachBatch(update)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_batches(parsed_stream, update, checkpoint_dir)
 
 
 def read_rollup(spark: SparkSession, rollup_path: str) -> DataFrame:
     """Merge partials → final (hour, room) stats. The only aggregate a
     dashboard query ever runs — over partials, not the fact table."""
-    partials = spark.read.parquet(rollup_path).dropDuplicates(
-        ["batch_id", "hour", "room"]
-    )
     return (
-        partials.groupBy("hour", "room")
+        spark.read.parquet(f"{rollup_path}/partials")
+        .groupBy("hour", "room")
         .agg(
             F.sum("n_partial").alias("n_readings"),
             (

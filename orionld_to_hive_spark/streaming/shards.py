@@ -14,15 +14,12 @@ Design (the streaming/ann.py + tokens.py store pattern):
       run the SAME Arrow-batched walker the batch query uses
       (parse_webdataset_meta_tolerant / parse_warc_meta — one shared
       function, so stream and batch manifests can never drift)
-      → write the batch's manifest rows to a parquet store, one
-      subdirectory per micro-batch.
+      → write the batch's manifest rows to its own slot of a parquet
+      store (`streaming/sink.py`: a replayed batch rewrites its slot).
 
-Exactly-once without a transactional sink: each foreachBatch call
-OVERWRITES its own `batch_id=N` subdirectory — a replayed batch
-(checkpoint recovery) rewrites the same rows instead of duplicating
-them. A shard re-delivered under a LATER batch_id (a crawler
-re-upload, a backfill) supersedes its old manifest row via
-latest-batch-wins on read.
+A shard re-delivered under a LATER batch_id (a crawler re-upload, a
+backfill) supersedes its old manifest row via latest-batch-wins on
+read.
 
 The invariant the unit tests pin: after any sequence of micro-batches
 (including replays and re-deliveries), `manifest()` is row-identical
@@ -32,9 +29,8 @@ one pass.
 Scale stance: per-batch work is one mapInPandas pass over the new
 archives only (metadata-only walks — payload bytes are skipped by
 header arithmetic, so cost is ~bytes-scanned/shard-size headers); the
-accumulated store is never rewritten or shuffled on ingest, and the
-read-back window folds into the standing compaction job at 100 TB
-exactly like the ANN index store.
+accumulated store is never rewritten or shuffled on ingest; the
+read-back window runs over every slot, as the ANN index store's does.
 """
 
 from __future__ import annotations
@@ -53,6 +49,7 @@ from orionld_to_hive_spark.operators.tar import (
 from orionld_to_hive_spark.operators.warc import parse_warc_meta
 from orionld_to_hive_spark.operators.zip import ZIP_SCHEMA, parse_zip_meta
 from orionld_to_hive_spark.operators.zstd import ZSTD_SCHEMA, parse_zstd_meta
+from orionld_to_hive_spark.streaming.sink import start_batches, write_slot
 
 WARC_AUDIT_SCHEMA = T.StructType(
     [
@@ -207,11 +204,9 @@ class StreamingShardAudit:
 
     # -- ingest ----------------------------------------------------------
     def write_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        """foreachBatch hook. Idempotent per batch_id (overwrite of
-        the batch's own subdirectory), so checkpoint replays cannot
-        double-insert."""
-        audit_frame(batch_df, self.kind).write.mode("overwrite").parquet(
-            f"{self.base}/manifest/batch_id={batch_id}"
+        """foreachBatch hook: the batch's manifest slot."""
+        write_slot(
+            audit_frame(batch_df, self.kind), self.base, "manifest", batch_id
         )
 
     def start(
@@ -222,14 +217,7 @@ class StreamingShardAudit:
     ):
         """Attach the audit sink to a streaming frame of
         (asset_id, payload) rows."""
-        writer = (
-            stream_df.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(self.write_batch)
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        return start_batches(stream_df, self.write_batch, checkpoint_dir, available_now)
 
     # -- read back -------------------------------------------------------
     def manifest(self, spark: SparkSession) -> DataFrame:

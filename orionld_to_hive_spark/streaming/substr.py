@@ -5,13 +5,12 @@ without re-scanning the corpus).
 
 Design: the cross-batch state is the GRAM-MINIMA store — one
 (gh, doc_id, pos) row per distinct gram per batch, the batch-local
-first occurrence, written under idempotent `batch_id=N` dirs (the
-`streaming/tokens.py` exactly-once move: a checkpoint replay
-overwrites its own partials instead of re-asserting them, and state
-reads filter `batch_id < N` so a replay never sees its own previous
-write). Read-time min-merge over the partials reconstructs the global
-first occurrence — min is idempotent and commutative, so the store is
-at-least-once-safe by algebra, exactly like the HLL/quantile stores.
+first occurrence, written to per-batch slots (`streaming/sink.py`:
+state reads filter `batch_id < N`, so a replay never sees its own
+previous write). Read-time min-merge over the partials reconstructs
+the global first occurrence — min is idempotent and commutative, so
+the store is at-least-once-safe by algebra, exactly like the
+HLL/quantile stores.
 
 Per batch: a batch occurrence is duplicated iff it is not the overall
 minimum of its gram, where overall = least(store minimum over earlier
@@ -28,11 +27,10 @@ every later comparison resolves exactly as the batch query's global
 min does). For unordered arrivals keep-first follows arrival order —
 the standard streaming-dedup semantics, pinned by its own unit.
 
-Scale: store grows one row per distinct gram (the inherent state of
-exact-substring dedup — Lee et al. 2022 keep a corpus suffix array);
-partials compact via min-merge with sources/compaction.py semantics.
-No broadcast, no collect; every stage is a keyed shuffle linear in
-the BATCH, not the corpus.
+Scale: store grows one row per distinct gram per batch that sees it
+(the inherent state of exact-substring dedup — Lee et al. 2022 keep a
+corpus suffix array). No broadcast, no collect; every stage is a
+keyed shuffle linear in the BATCH, not the corpus.
 """
 
 from __future__ import annotations
@@ -46,7 +44,12 @@ from orionld_to_hive_spark.operators.dedup import (
     _substr_cut,
     _substr_grams,
 )
-from orionld_to_hive_spark.streaming.asof import _hadoop_exists
+from orionld_to_hive_spark.streaming.sink import (
+    exists,
+    read_state,
+    start_batches,
+    write_slot,
+)
 
 
 def _gram_minima(
@@ -56,7 +59,7 @@ def _gram_minima(
     (bmin(gh, bpk), mins(gh, opk)). Factored from process_batch so the
     hash-aggregate plan shape is test/plan-dump addressable."""
     bmin = grams.groupBy("gh").agg(F.min("pk").alias("bpk"))
-    if _hadoop_exists(spark, f"{base}/grams"):
+    if exists(spark, f"{base}/grams"):
         # prune the store to this batch's gram keys BEFORE the
         # min-merge aggregate — the semi-join keeps the per-batch
         # cost keyed on the BATCH's grams; aggregating the whole
@@ -116,21 +119,18 @@ class StreamingExactSubstr:
             .persist()  # two consumers in the cut stage; released below
         )
         try:
-            _substr_cut(docs, dup).write.mode("overwrite").parquet(
-                f"{self.base}/out/batch_id={batch_id}"
-            )
+            write_slot(_substr_cut(docs, dup), self.base, "out", batch_id)
             # unpack preserves the pre-r14 store column types exactly
-            # (doc_id bigint, pos int) — replay/compaction unaffected
-            bmin.select(
+            # (doc_id bigint, pos int), so replays read the same store
+            unpacked = bmin.select(
                 "gh",
                 F.shiftright(F.col("bpk"), 32).alias("doc_id"),
                 F.col("bpk")
                 .bitwiseAND(F.lit((1 << 32) - 1))
                 .cast("int")
                 .alias("pos"),
-            ).write.mode("overwrite").parquet(
-                f"{self.base}/grams/batch_id={batch_id}"
             )
+            write_slot(unpacked, self.base, "grams", batch_id)
         finally:
             dup.unpersist()
 
@@ -138,26 +138,20 @@ class StreamingExactSubstr:
         self, stream_df: DataFrame, checkpoint_dir: str,
         available_now: bool = True,
     ):
-        writer = (
-            stream_df.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(self.process_batch)
+        return start_batches(
+            stream_df, self.process_batch, checkpoint_dir, available_now
         )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
 
     def rewritten(self, spark: SparkSession) -> DataFrame:
         """All rewritten rows so far, schema-identical to the batch
         `exact_substr_rewrite` (plus the batch_id partition column,
         dropped here)."""
-        if not _hadoop_exists(spark, f"{self.base}/out"):
-            raise RuntimeError(
-                f"no output under {self.base}/out yet — run the rewrite "
-                "stream (start / process_batch) before reading the view"
-            )
         return (
-            spark.read.parquet(f"{self.base}/out")
+            read_state(
+                spark,
+                f"{self.base}/out",
+                "the rewrite stream (start / process_batch)",
+            )
             .select("doc_id", "n_tokens", "n_removed", "cleaned_text")
             .orderBy("doc_id")
         )

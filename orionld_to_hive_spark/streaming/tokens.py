@@ -7,9 +7,9 @@ Design: foreachBatch computes the batch's per-source partials —
 (source, n_docs, n_words, n_tokens) — with the SAME frozen merge
 table, pre-tokenizer, and distinct-word-then-join shape as the batch
 op (the merge chain runs on the batch's distinct words only), and
-writes them under an idempotent `batch_id=N` directory (the
-`streaming/ann.py` exactly-once move: a checkpoint replay overwrites
-its own partials instead of double-counting). The read view sums
+writes them to the batch's own `batch_id=N` slot (`streaming/sink.py`:
+a checkpoint replay rewrites its own partials instead of
+double-counting). The read view sums
 partials — counts are associative, so ANY micro-batch split of the
 corpus yields byte-identical totals to the batch query (pinned by the
 stream ≡ batch unit), and the ratio columns (fertility, tokens/doc)
@@ -17,8 +17,8 @@ are derived at READ time from the summed integers — never averaged
 across batches, which would be wrong for unequal batch sizes.
 
 State is O(sources) per batch — no vocabulary or corpus state is kept
-between batches. At 100 TB the accumulated partials table is tiny
-(batches × sources rows) and compacts with sources/compaction.py.
+between batches. The accumulated partials table is tiny (batches ×
+sources rows).
 """
 
 from __future__ import annotations
@@ -30,6 +30,7 @@ from orionld_to_hive_spark.operators.bpe import (
     _doc_word_counts_frame,
     _vocab_tokens,
 )
+from orionld_to_hive_spark.streaming.sink import read_state, start_batches, write_slot
 
 
 def batch_partials(docs: DataFrame) -> DataFrame:
@@ -81,22 +82,13 @@ class StreamingTokenAccounting:
         self.partials_fn = partials_fn or batch_partials
 
     def write_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        self.partials_fn(batch_df).write.mode("overwrite").parquet(
-            f"{self.base}/partials/batch_id={batch_id}"
-        )
+        write_slot(self.partials_fn(batch_df), self.base, "partials", batch_id)
 
     def start(
         self, stream_df: DataFrame, checkpoint_dir: str,
         available_now: bool = True,
     ):
-        writer = (
-            stream_df.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(self.write_batch)
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        return start_batches(stream_df, self.write_batch, checkpoint_dir, available_now)
 
     def accounting(self, spark: SparkSession) -> DataFrame:
         """Current totals, schema-identical to the batch
@@ -104,17 +96,13 @@ class StreamingTokenAccounting:
         Raises with the bootstrap step if no batch has been written
         yet (r8 review: an explicit contract error, not a path-missing
         AnalysisException)."""
-        from orionld_to_hive_spark.streaming.asof import _hadoop_exists
-
-        if not _hadoop_exists(spark, f"{self.base}/partials"):
-            raise RuntimeError(
-                f"no partials under {self.base}/partials yet — run the "
-                "accounting stream (start / write_batch) before reading "
-                "the totals view"
-            )
-        p = spark.read.parquet(f"{self.base}/partials")
         return (
-            p.groupBy("source")
+            read_state(
+                spark,
+                f"{self.base}/partials",
+                "the accounting stream (start / write_batch)",
+            )
+            .groupBy("source")
             .agg(
                 F.sum("n_docs").alias("n_docs"),
                 F.sum("n_words").alias("n_words"),

@@ -78,12 +78,12 @@ def _grams_with_pk(spark, rows):
 
 def _old_minima(spark, base, grams, batch_id):
     """Inline reconstruction of the pre-r14 struct-based minima."""
-    from orionld_to_hive_spark.streaming.asof import _hadoop_exists
+    from orionld_to_hive_spark.streaming.sink import exists
 
     bmin = grams.groupBy("gh").agg(
         F.min(F.struct("doc_id", "pos")).alias("bmin")
     )
-    if _hadoop_exists(spark, f"{base}/grams"):
+    if exists(spark, f"{base}/grams"):
         smin = (
             spark.read.parquet(f"{base}/grams")
             .filter(F.col("batch_id") < batch_id)
