@@ -366,10 +366,7 @@ def write_partitioned(
 
 
 def overwrite_partitions(
-    df: DataFrame,
-    path: str,
-    partition_cols: tuple[str, ...],
-    sort_cols: tuple[str, ...] = (),
+    df: DataFrame, path: str, partition_cols: tuple[str, ...]
 ) -> None:
     """Idempotent partition backfill: overwrite ONLY the partitions
     present in `df`, leave every other partition untouched (dynamic
@@ -379,8 +376,5 @@ def overwrite_partitions(
     is a no-op semantically (same input → same partition contents).
     The mode is a per-write option, so the session conf is untouched
     and a concurrent static overwrite keeps its static semantics."""
-    out = df
-    if sort_cols:
-        out = out.sortWithinPartitions(*sort_cols)
-    writer = out.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+    writer = df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
     writer.partitionBy(*partition_cols).parquet(path)

@@ -53,27 +53,10 @@ def temp_humidity_interval_join(
 
     Inner join ⇒ append mode; both watermarks + the band bound state.
     """
-    temps = (
-        parsed.filter(F.col("temperature").isNotNull())
-        .select("room", F.col("event_ts").alias("t_ts"), "temperature")
-        .withWatermark("t_ts", watermark)
+    temps, hums = _watermarked_sides(parsed, watermark)
+    return temps.join(hums, _band(gap), "inner").select(
+        "room", "t_ts", "temperature", "h_ts", "humidity"
     )
-    hums = (
-        parsed.filter(F.col("humidity").isNotNull())
-        .select(
-            F.col("room").alias("h_room"),
-            F.col("event_ts").alias("h_ts"),
-            "humidity",
-        )
-        .withWatermark("h_ts", watermark)
-    )
-    return temps.join(
-        hums,
-        F.expr(
-            f"room = h_room AND h_ts >= t_ts AND h_ts <= t_ts + INTERVAL {gap}"
-        ),
-        "inner",
-    ).select("room", "t_ts", "temperature", "h_ts", "humidity")
 
 
 def temp_humidity_outer_join(
@@ -95,27 +78,10 @@ def temp_humidity_outer_join(
     (gap + watermark)) like the inner form — outer adds no retention,
     only a tombstone emission at eviction time.
     """
-    temps = (
-        parsed.filter(F.col("temperature").isNotNull())
-        .select("room", F.col("event_ts").alias("t_ts"), "temperature")
-        .withWatermark("t_ts", watermark)
+    temps, hums = _watermarked_sides(parsed, watermark)
+    return temps.join(hums, _band(gap), "left_outer").select(
+        "room", "t_ts", "temperature", "h_ts", "humidity"
     )
-    hums = (
-        parsed.filter(F.col("humidity").isNotNull())
-        .select(
-            F.col("room").alias("h_room"),
-            F.col("event_ts").alias("h_ts"),
-            "humidity",
-        )
-        .withWatermark("h_ts", watermark)
-    )
-    return temps.join(
-        hums,
-        F.expr(
-            f"room = h_room AND h_ts >= t_ts AND h_ts <= t_ts + INTERVAL {gap}"
-        ),
-        "left_outer",
-    ).select("room", "t_ts", "temperature", "h_ts", "humidity")
 
 
 def _watermarked_sides(

@@ -101,19 +101,26 @@ def test_merge_read_side_prunes_partitions(spark, tmp_path):
     assert "day" in seg
 
 
-def test_merge_rejects_null_partition_values(spark, tmp_path):
+@pytest.mark.parametrize("bad_day", [None, ""], ids=["null", "empty"])
+def test_merge_rejects_null_partition_values(spark, tmp_path, bad_day):
     # ADVICE r3: a NULL partition value never equi-matches during the
     # touched-partition read-back, silently disabling latest-wins for
-    # that partition — reject it up front.
-    import pytest
-
+    # that partition — reject it up front. Spark writes "" to the same
+    # default-partition directory as NULL, so merging a "" row would
+    # read back `day <=> ''` (missing the NULL rows there) and then
+    # overwrite that directory whole: reject it too.
     path = str(tmp_path / "tbl5")
     write_partitioned(_base(spark), path, partition_cols=("day",))
-    updates = spark.createDataFrame(
-        [(9, None, 1, 90.0)], "id LONG, day STRING, version LONG, value DOUBLE"
-    )
+    schema = "id LONG, day STRING, version LONG, value DOUBLE"
+    # a row in the NULL partition, planted past merge's guard
+    spark.createDataFrame([(8, None, 1, 80.0)], schema).write.mode(
+        "append"
+    ).partitionBy("day").parquet(path)
+    updates = spark.createDataFrame([(9, bad_day, 1, 90.0)], schema)
     with pytest.raises(ValueError, match="NULL partition"):
         merge_upsert(path, updates, ("id",), "version", ("day",))
+    got = {r.id: r.day for r in spark.read.parquet(path).collect()}
+    assert got == {1: "a", 2: "a", 3: "b", 4: "c", 8: None}
 
 
 def test_merge_detects_partition_unstable_keys(spark, tmp_path):
@@ -394,9 +401,9 @@ def test_merge_schema_evolution_adds_column(spark, tmp_path):
 
     path = str(tmp_path / "tbl_evolve")
     write_partitioned(_base(spark), path, partition_cols=("day",))
-    before_c = _files_mtimes(path, "day=c")
+    before_a = _files_mtimes(path, "day=a")
     wide = spark.createDataFrame(
-        [(2, "a", 2, 21.0, "gold"), (5, "b", 1, 50.0, "silver")],
+        [(3, "b", 2, 31.0, "gold"), (5, "c", 1, 50.0, "silver")],
         "id LONG, day STRING, version LONG, value DOUBLE, tier STRING",
     )
     n = merge_upsert(
@@ -408,12 +415,12 @@ def test_merge_schema_evolution_adds_column(spark, tmp_path):
         for r in read_merged(spark, path).collect()
     }
     # update rows carry the new column
-    assert got[2] == (2, 21.0, "gold") and got[5] == (1, 50.0, "silver")
+    assert got[3] == (2, 31.0, "gold") and got[5] == (1, 50.0, "silver")
     # existing rows in rewritten partitions: typed NULL (add-column)
-    assert got[1] == (1, 10.0, None) and got[3] == (1, 30.0, None)
-    # untouched partition: files byte-identical, NULL via mergeSchema
-    assert _files_mtimes(path, "day=c") == before_c
     assert got[4] == (1, 40.0, None)
+    # untouched partition: files byte-identical, NULL via mergeSchema
+    assert _files_mtimes(path, "day=a") == before_a
+    assert got[1] == (1, 10.0, None) and got[2] == (1, 20.0, None)
     # a SECOND merge with the evolved schema sees the union schema via
     # the mergeSchema read-back (old-footer partitions included)
     wide2 = spark.createDataFrame(
@@ -424,7 +431,17 @@ def test_merge_schema_evolution_adds_column(spark, tmp_path):
         path, wide2, ("id",), "version", ("day",), schema_evolution=True
     )
     got2 = {r.id: r.tier for r in read_merged(spark, path).collect()}
-    assert got2[4] == "bronze" and got2[2] == "gold"
+    assert got2[4] == "bronze" and got2[3] == "gold"
+    # once the table has the column, a batch carrying it is a plain
+    # merge with no schema_evolution, although day=a (the first
+    # partition, the one a plain read samples) still has the old footer
+    wide3 = spark.createDataFrame(
+        [(3, "b", 3, 32.0, "silver")],
+        "id LONG, day STRING, version LONG, value DOUBLE, tier STRING",
+    )
+    merge_upsert(path, wide3, ("id",), "version", ("day",))
+    got3 = {r.id: r.tier for r in read_merged(spark, path).collect()}
+    assert got3[3] == "silver" and got3[4] == "bronze" and got3[1] is None
 
 
 def test_merge_tombstone_deletes_key_and_replay_is_idempotent(
@@ -670,11 +687,11 @@ def test_purge_tombstones_on_schema_evolved_table_keeps_columns(
         schema_evolution=True,
     )
     # the retention rewrite touches day=a (evolved files live there);
-    # schema_evolved=True forwards to delete_where so the copy-on-write
-    # rewrite cannot sample a pre-evolution footer and drop `tier`
+    # delete_where reads the union schema, so the copy-on-write rewrite
+    # cannot sample a pre-evolution footer and drop `tier`
     n = purge_tombstones(
         spark, path, "deleted", ("day",), up_to_version=7,
-        version_col="version", schema_evolved=True,
+        version_col="version",
     )
     assert n == 1
     got = {
@@ -782,9 +799,10 @@ def test_merge_delete_col_refused_on_persisted_tombstone_table(
 
 
 def test_dml_on_evolved_table_keeps_evolved_column(spark, tmp_path):
-    """delete_where/update_where with schema_evolved=True must carry the
-    evolved column through the rewrite — a plain-footer rewrite could
-    sample a pre-evolution footer and drop it permanently."""
+    """delete_where/update_where must carry the evolved column through
+    the rewrite — a plain-footer rewrite could sample a pre-evolution
+    footer and drop it permanently. The evolved partition is day=b, not
+    the first one, so a sampled footer would miss it."""
     from orionld_to_hive_spark.sources.merge import (
         delete_where,
         read_merged,
@@ -794,20 +812,17 @@ def test_dml_on_evolved_table_keeps_evolved_column(spark, tmp_path):
     path = str(tmp_path / "tbl_evo_dml")
     write_partitioned(_base(spark), path, partition_cols=("day",))
     wide = spark.createDataFrame(
-        [(2, "a", 2, 21.0, "gold")],
+        [(3, "b", 2, 31.0, "gold"), (5, "b", 1, 50.0, "silver")],
         "id LONG, day STRING, version LONG, value DOUBLE, tier STRING",
     )
     merge_upsert(
         path, wide, ("id",), "version", ("day",), schema_evolution=True
     )
     # delete a row from the EVOLVED partition; tier must survive
-    delete_where(spark, path, "id = 1", ("day",), schema_evolved=True)
+    delete_where(spark, path, "id = 5", ("day",))
     got = {r.id: r.tier for r in read_merged(spark, path).collect()}
-    assert 1 not in got and got[2] == "gold"
+    assert 5 not in got and got[3] == "gold"
     # update the evolved partition; tier must survive that too
-    update_where(
-        spark, path, "id = 2", {"value": "value + 1"}, ("day",),
-        schema_evolved=True,
-    )
+    update_where(spark, path, "id = 3", {"value": "value + 1"}, ("day",))
     got2 = {r.id: (r.value, r.tier) for r in read_merged(spark, path).collect()}
-    assert got2[2] == (22.0, "gold")
+    assert got2[3] == (32.0, "gold")
