@@ -9,6 +9,15 @@ Arrow on (vectorized Pandas-UDF exchange).
 
 At cluster scale the same factory applies; only master/memory/shuffle
 partition counts change (they are parameters here, not hardcoded).
+
+A local master (`local[...]`) commits streaming checkpoints through
+Spark's FileSystem-based checkpoint manager. The default one renames
+through Hadoop's `FileContext`, which on the local filesystem forks a
+`readlink` process per offset, commit and source-log file; both managers
+check and then rename there (Hadoop's local overwrite-rename is a delete
+plus a rename), so no atomicity is lost, and `FileSystem.rename` forks
+nothing. Other masters keep Spark's default, whose `FileContext` rename
+is atomic on HDFS.
 """
 
 from __future__ import annotations
@@ -52,6 +61,12 @@ def get_spark(
         # from the session only
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     )
+    if master.startswith("local"):
+        builder = builder.config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

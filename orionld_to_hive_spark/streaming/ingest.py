@@ -13,6 +13,11 @@ engine code:
     → normalize to readings rows           # F11: Property.value extraction
     → writeStream.foreachBatch(write_partitioned)  # S4, checkpointed
 
+A micro-batch takes new files up to a byte bound, by default the
+session's scan split size, and at least one file, so a backlog of small
+notification files drains in as few micro-batches as its bytes allow
+(`read_notification_stream` says why bytes and not files).
+
 Each micro-batch goes through the batch path's writer, so streamed and
 batch readings share one layout: room-partitioned, one ts-sorted file
 per room per batch at this size. The reference's per-entity throttle
@@ -65,11 +70,29 @@ def parse_notifications(df: DataFrame) -> DataFrame:
 
 
 def read_notification_stream(
-    spark: SparkSession, in_dir: str, max_files_per_trigger: int = 16
+    spark: SparkSession, in_dir: str, max_bytes_per_trigger: int | None = None
 ) -> DataFrame:
+    """The notification files in `in_dir` as a stream of readings rows.
+
+    Each micro-batch takes new files up to `max_bytes_per_trigger` bytes
+    in all (`maxBytesPerTrigger`), by default the session's scan split
+    size, `spark.sql.files.maxPartitionBytes`. Spark takes at least one
+    file per trigger, so `max_bytes_per_trigger=1` paces one file per
+    micro-batch. The bound is in bytes, not files, because the transport
+    lands one small file per notification or so: a micro-batch costs a
+    fixed amount of CPU (planning, offset and commit logs, one write job)
+    that is larger than the work on a few rows, so a backlog of small
+    files should drain in as few micro-batches as its bytes allow.
+    """
+    if max_bytes_per_trigger is None:
+        # the conf reads back as "134217728b"; the option takes digits
+        java_utils = spark._jvm.org.apache.spark.network.util.JavaUtils
+        max_bytes_per_trigger = java_utils.byteStringAsBytes(
+            spark.conf.get("spark.sql.files.maxPartitionBytes")
+        )
     raw = (
         spark.readStream.schema(NGSI_NOTIFICATION_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxBytesPerTrigger", max_bytes_per_trigger)
         .json(in_dir)
     )
     return parse_notifications(raw)

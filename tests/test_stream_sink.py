@@ -43,7 +43,7 @@ def test_read_state_on_missing_path_names_path_and_step(spark, tmp_path):
 
 
 def _drop_files(in_dir, lines):
-    """One JSON file per line, oldest first: with maxFilesPerTrigger=1
+    """One JSON file per line, oldest first: at one file per trigger
     file i is micro-batch i."""
     in_dir.mkdir()
     for i, line in enumerate(lines):
@@ -105,7 +105,7 @@ def test_rollup_rerun_with_fresh_checkpoint_leaves_view_unchanged(
 
     def run(ckpt):
         stream = read_notification_stream(
-            spark, str(in_dir), max_files_per_trigger=1
+            spark, str(in_dir), max_bytes_per_trigger=1
         )
         start_rollup(stream, rollup_path, str(tmp_path / ckpt)).awaitTermination(120)
         return _rows(read_rollup(spark, rollup_path))

@@ -4,6 +4,7 @@ checkpointed ingest, latest-wins upsert."""
 from __future__ import annotations
 
 import json
+import os
 import time
 
 import pytest
@@ -178,6 +179,55 @@ def test_ingest_stream_end_to_end_exactly_once(spark, tmp_path):
     assert len(kitchen) == 1 and kitchen[0].temperature == 21.0
 
 
+def _drop_notifications(in_dir, n: int) -> None:
+    """n one-notification files, file i the i-th oldest."""
+    in_dir.mkdir()
+    for i in range(n):
+        f = in_dir / f"n{i:02d}.json"
+        f.write_text(_notification([_entity("Kitchen", temperature=float(i))]) + "\n")
+        os.utime(f, (1_700_000_000 + i, 1_700_000_000 + i))
+
+
+def test_ingest_drains_small_file_backlog_in_one_micro_batch(spark, tmp_path):
+    in_dir = tmp_path / "notifications"
+    _drop_notifications(in_dir, 32)
+    out = str(tmp_path / "warehouse")
+    q = start_ingest(spark, str(in_dir), out, str(tmp_path / "ckpt"))
+    assert q.awaitTermination(120)
+    batches = [p.numInputRows for p in q.recentProgress if p.numInputRows > 0]
+    assert batches == [32]
+    assert spark.read.parquet(out).count() == 32
+
+
+def test_byte_bound_of_one_paces_one_file_per_micro_batch(spark, tmp_path):
+    from orionld_to_hive_spark.streaming.ingest import read_notification_stream
+    from orionld_to_hive_spark.streaming.sink import start_batches
+
+    in_dir = tmp_path / "notifications"
+    _drop_notifications(in_dir, 3)
+    stream = read_notification_stream(spark, str(in_dir), max_bytes_per_trigger=1)
+    seen = []
+
+    def fn(batch_df, batch_id):
+        seen.append((batch_id, [r.temperature for r in batch_df.collect()]))
+
+    q = start_batches(stream, fn, str(tmp_path / "ckpt"))
+    assert q.awaitTermination(120)
+    assert seen == [(0, [0.0]), (1, [1.0]), (2, [2.0])]
+
+
+def test_local_session_commits_checkpoints_through_filesystem(spark, tmp_path):
+    """A local master's checkpoint manager renames with `FileSystem`,
+    which forks no `readlink` per metadata file."""
+    jvm = spark._jvm
+    checkpointing = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    manager = checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(tmp_path / "ckpt")),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert manager.getClass().getSimpleName() == "FileSystemBasedCheckpointFileManager"
+
+
 def _entity_at(room: str, observed_at: str, **attrs) -> dict:
     e = {"id": f"urn:ngsi-ld:{room}:{room}", "type": room}
     for name, value in attrs.items():
@@ -224,7 +274,7 @@ def test_windowed_event_time_agg_with_watermark(spark, tmp_path):
         + "\n"
     )
 
-    parsed = read_notification_stream(spark, str(in_dir), max_files_per_trigger=1)
+    parsed = read_notification_stream(spark, str(in_dir), max_bytes_per_trigger=1)
     q = start_windowed_query(parsed, str(tmp_path / "ckpt_win"), "win_out")
     q.awaitTermination(120)
 
@@ -258,7 +308,7 @@ def test_stream_dedup_within_watermark(spark, tmp_path):
         _notification([e1]) + "\n" + _notification([e3]) + "\n"
     )
 
-    parsed = read_notification_stream(spark, str(in_dir), max_files_per_trigger=1)
+    parsed = read_notification_stream(spark, str(in_dir), max_bytes_per_trigger=1)
     deduped = dedup_within_watermark(
         parsed.select("entityid", "event_ts", "temperature"),
         ("entityid", "event_ts"),
@@ -336,7 +386,7 @@ def test_stream_stream_interval_join(spark, tmp_path):
         + "\n"
     )
 
-    parsed = read_notification_stream(spark, str(in_dir), max_files_per_trigger=1)
+    parsed = read_notification_stream(spark, str(in_dir), max_bytes_per_trigger=1)
     q = start_interval_join_query(parsed, str(tmp_path / "ckpt_join"), "join_out")
     q.awaitTermination(120)
 
@@ -381,7 +431,7 @@ def test_incremental_rollup_matches_batch_aggregate(spark, tmp_path):
     )
 
     rollup_path = str(tmp_path / "rollup_table")
-    stream = read_notification_stream(spark, str(in_dir), max_files_per_trigger=1)
+    stream = read_notification_stream(spark, str(in_dir), max_bytes_per_trigger=1)
     q = start_rollup(stream, rollup_path, str(tmp_path / "ckpt_rollup"))
     q.awaitTermination(120)
 
@@ -451,7 +501,7 @@ def test_stream_stream_outer_join_emits_unmatched_after_watermark(
         + "\n"
     )
 
-    parsed = read_notification_stream(spark, str(in_dir), max_files_per_trigger=1)
+    parsed = read_notification_stream(spark, str(in_dir), max_bytes_per_trigger=1)
     q = start_outer_join_query(parsed, str(tmp_path / "ckpt_ojoin"), "ojoin_out")
     q.awaitTermination(180)
     assert q.exception() is None, q.exception()
@@ -532,7 +582,7 @@ def test_stream_stream_full_outer_and_semi_joins(spark, tmp_path):
 
     def run(builder, name):
         parsed = read_notification_stream(
-            spark, str(in_dir), max_files_per_trigger=1
+            spark, str(in_dir), max_bytes_per_trigger=1
         )
         q = (
             builder(parsed)
@@ -643,7 +693,7 @@ def test_stream_stream_right_outer_join(spark, tmp_path):
         + "\n"
     )
 
-    parsed = read_notification_stream(spark, str(in_dir), max_files_per_trigger=1)
+    parsed = read_notification_stream(spark, str(in_dir), max_bytes_per_trigger=1)
     q = (
         temp_humidity_right_outer_join(parsed)
         .writeStream.outputMode("append")

@@ -103,15 +103,17 @@ def test_stream_one_ts_sorted_file_per_room_per_batch(spark, tmp_path):
     in_dir = tmp_path / "notifications"
     in_dir.mkdir()
     rooms = ("Kitchen", "Room1", "Bathroom")
-    n_files = 20  # two micro-batches at 16 files per trigger
-    for n in range(n_files):
-        (in_dir / f"n{n:02d}.json").write_text(
-            "\n".join(_notification(10 * n + j, rooms) for j in range(5)) + "\n"
-        )
+    n_files = 20  # two micro-batches: two drains of 10 files on one checkpoint
     out = str(tmp_path / "stream_out")
-    q = start_ingest(spark, str(in_dir), out, str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
-    batches = [p for p in q.recentProgress if p.numInputRows > 0]
+    batches = []
+    for first in (0, n_files // 2):
+        for n in range(first, first + n_files // 2):
+            (in_dir / f"n{n:02d}.json").write_text(
+                "\n".join(_notification(10 * n + j, rooms) for j in range(5)) + "\n"
+            )
+        q = start_ingest(spark, str(in_dir), out, str(tmp_path / "ckpt"))
+        q.awaitTermination(120)
+        batches += [p for p in q.recentProgress if p.numInputRows > 0]
     assert len(batches) == 2
 
     files = _files_by_room(out)
